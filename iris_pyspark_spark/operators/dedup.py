@@ -14,6 +14,8 @@ other key — that is the property that survives 100 TB.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -133,8 +135,7 @@ def lsh_candidate_pairs(
     shingle_k: int = 3,
     num_hashes: int = 32,
     bands: int = 8,
-    materialize_path: str | None = None,
-    materialize_fingerprint: str | None = None,
+    signature_artifact: Callable[[Callable[[str], object]], str] | None = None,
     with_estimate: bool = True,
 ) -> DataFrame:
     """MinHash-LSH near-dup candidates: docs agreeing on ALL rows of at
@@ -144,11 +145,14 @@ def lsh_candidate_pairs(
 
     Plan shape (the part that survives 100 TB):
       1. signature table (id, sig) — consumed three times (banding +
-         both sides of the estimate join), so it is materialized ONCE to
-         `materialize_path` parquet when given (the production move: the
+         both sides of the estimate join), so it is materialized ONCE
+         when `signature_artifact` is given (the production move: the
          signature table is a pipeline artifact, not a throwaway subplan;
          without it Spark recomputes the whole text→shingle→hash chain
-         per consumer).
+         per consumer). `signature_artifact(build)` publishes the table
+         through `build(path)` unless a current artifact is already
+         there and returns the parquet path — callers bind
+         `sources.materialize` to the artifact's name and inputs.
       2. candidate pairs carry ONLY (id_a, id_b): dedup of bare longs is
          a HashAggregate; dragging the sig arrays through the join would
          force sort-based aggregation and a far wider shuffle.
@@ -156,35 +160,11 @@ def lsh_candidate_pairs(
     """
     rows = num_hashes // bands
     signed = minhash_signatures(df, id_col, text_col, shingle_k, num_hashes)
-    if materialize_path is not None:
-        # Artifact reuse across runs: signatures are a pure function of
-        # (corpus, shingle_k, num_hashes), so an existing artifact is
-        # served only when its input fingerprint matches — the caller
-        # passes table_fingerprint(sf_dir, ..., params=...). No
-        # fingerprint → always rebuild (correct, just uncached): path
-        # existence alone must never gate reuse, or regenerated corpus
-        # data / changed parameters silently serve stale signatures.
-        from ..sources import (
-            artifact_is_current,
-            mark_artifact,
-            record_build_seconds,
+    if signature_artifact is not None:
+        path = signature_artifact(
+            lambda p: signed.write.mode("overwrite").parquet(p)
         )
-
-        if materialize_fingerprint is None or not artifact_is_current(
-            materialize_path, materialize_fingerprint
-        ):
-            import os
-            import time
-
-            t0 = time.perf_counter()
-            signed.write.mode("overwrite").parquet(materialize_path)
-            record_build_seconds(
-                os.path.basename(materialize_path.rstrip("/")),
-                time.perf_counter() - t0,
-            )
-            if materialize_fingerprint is not None:
-                mark_artifact(materialize_path, materialize_fingerprint)
-        signed = df.sparkSession.read.parquet(materialize_path)
+        signed = df.sparkSession.read.parquet(path)
     # Band hashes as EXPLICIT columns, not array lambdas: transform()/
     # slice() higher-order expressions evaluate interpreted (~100x
     # slower than codegen); unrolling the (band x row) structure into

@@ -538,12 +538,7 @@ def s_incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
     LSH signature table): rebuilt when the input data changes, reused
     otherwise.
     """
-    from ..sources import (
-        artifact_is_current,
-        mark_artifact,
-        scratch_dir,
-        table_fingerprint,
-    )
+    from ..sources import materialize
 
     split = "1997-01-01"
     orders = load_table(spark, sf_dir, "orders")
@@ -555,13 +550,15 @@ def s_incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
             F.max("o_orderdate").alias("last_orderdate"),
         )
 
-    state_path = scratch_dir(sf_dir, "incr_agg") + "/state"
-    fp = table_fingerprint(sf_dir, "orders", params=f"incr_agg_v1:{split}")
-    if not artifact_is_current(state_path, fp):
-        summarize(orders.filter(F.col("o_orderdate") < split)).write.mode(
-            "overwrite"
-        ).parquet(state_path)
-        mark_artifact(state_path, fp)
+    state_path = materialize(
+        sf_dir,
+        "incr_agg_state",
+        lambda p: summarize(orders.filter(F.col("o_orderdate") < split))
+        .write.mode("overwrite")
+        .parquet(p),
+        tables=("orders",),
+        params=f"incr_agg_v1:{split}",
+    )
     state = spark.read.parquet(state_path)
     delta = summarize(orders.filter(F.col("o_orderdate") >= split))
     s, d = state.alias("s"), delta.alias("d")
@@ -968,20 +965,25 @@ def s_merge_on_read_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     premise of MoR); the base scan stays pruned/columnar; compaction
     (fold the vector into a rewrite) is `s_small_file_compaction`'s
     job."""
-    from ..sources import artifact_is_current, mark_artifact, scratch_dir, table_fingerprint
+    from ..sources import materialize
 
     o = load_table(spark, sf_dir, "orders")
-    base_path = scratch_dir(sf_dir, "mor_base_orders")
-    dv_path = scratch_dir(sf_dir, "mor_deletes_orders")
-    fp = table_fingerprint(sf_dir, "orders", params="mor-v1")
-    if not artifact_is_current(base_path, fp):
-        o.write.mode("overwrite").parquet(base_path)
-        mark_artifact(base_path, fp)
-    if not artifact_is_current(dv_path, fp):
-        o.filter(F.col("o_orderkey") % 37 == 0).select("o_orderkey").write.mode(
-            "overwrite"
-        ).parquet(dv_path)
-        mark_artifact(dv_path, fp)
+    inputs = {"tables": ("orders",), "params": "mor-v1"}
+    base_path = materialize(
+        sf_dir,
+        "mor_base_orders",
+        lambda p: o.write.mode("overwrite").parquet(p),
+        **inputs,
+    )
+    dv_path = materialize(
+        sf_dir,
+        "mor_deletes_orders",
+        lambda p: o.filter(F.col("o_orderkey") % 37 == 0)
+        .select("o_orderkey")
+        .write.mode("overwrite")
+        .parquet(p),
+        **inputs,
+    )
     base = spark.read.parquet(base_path)
     dv = spark.read.parquet(dv_path)
     alive = base.join(F.broadcast(dv), "o_orderkey", "left_anti")

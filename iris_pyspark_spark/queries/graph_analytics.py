@@ -149,24 +149,11 @@ def _triangle_artifacts(spark: SparkSession, sf_dir: str):
     are left unhinted: the planner broadcasts deg when it fits and
     hash-joins otherwise — both scale.
     """
-    import time
+    from ..sources import materialize
 
-    from ..sources import (
-        artifact_is_current,
-        mark_artifact,
-        record_build_seconds,
-        scratch_dir,
-        table_fingerprint,
-    )
-
-    base = scratch_dir(sf_dir, "triangles")
-    ek_path, adj_path = base + "/ek", base + "/adj"
-    fp = table_fingerprint(sf_dir, "lineitem", params="tri_orient_v3")
     deg = _pair_degrees(spark, sf_dir)
-    if not (
-        artifact_is_current(ek_path, fp) and artifact_is_current(adj_path, fp)
-    ):
-        t0 = time.perf_counter()
+
+    def build_ek(path: str) -> None:
         pairs = _coorder_pairs(spark, sf_dir)
         du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
         dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
@@ -181,16 +168,19 @@ def _triangle_artifacts(spark: SparkSession, sf_dir: str):
                 F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
             )
         )
-        oriented.write.mode("overwrite").parquet(ek_path)
-        mark_artifact(ek_path, fp)
+        oriented.write.mode("overwrite").parquet(path)
+
+    def build_adj(path: str) -> None:
         adj = (
             spark.read.parquet(ek_path)
             .groupBy("src")
             .agg(F.collect_list("dst").alias("nbrs"))
         )
-        adj.write.mode("overwrite").parquet(adj_path)
-        mark_artifact(adj_path, fp)
-        record_build_seconds("triangle_orient", time.perf_counter() - t0)
+        adj.write.mode("overwrite").parquet(path)
+
+    inputs = {"tables": ("lineitem",), "params": "tri_orient_v3"}
+    ek_path = materialize(sf_dir, "triangle_ek", build_ek, **inputs)
+    adj_path = materialize(sf_dir, "triangle_adj", build_adj, **inputs)
     return (
         spark.read.parquet(ek_path),
         deg,
@@ -311,30 +301,22 @@ def _coorder_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     times (per BFS round, per join side), so without materialization
     Spark re-runs the lineitem self-join once per consumer pass
     (measured 4x at sf0.1: 13s -> ~3s for BFS alone)."""
-    from ..sources import (
-        artifact_is_current,
-        mark_artifact,
-        scratch_dir,
-        table_fingerprint,
-    )
+    from ..sources import materialize
 
-    pairs_path = scratch_dir(sf_dir, "coorder") + "/pairs"
-    fp = table_fingerprint(sf_dir, "lineitem", params="coorder_pairs_v2")
-    if not artifact_is_current(pairs_path, fp):
-        import time
-
-        from ..sources import record_build_seconds
-
-        t0 = time.perf_counter()
-        (
-            _basket_pairs(spark, sf_dir)
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(pairs_path)
+    def build(path: str) -> None:
+        _basket_pairs(spark, sf_dir).distinct().write.mode("overwrite").parquet(
+            path
         )
-        record_build_seconds("coorder_pairs", time.perf_counter() - t0)
-        mark_artifact(pairs_path, fp)
-    return spark.read.parquet(pairs_path)
+
+    return spark.read.parquet(
+        materialize(
+            sf_dir,
+            "coorder_pairs",
+            build,
+            tables=("lineitem",),
+            params="coorder_pairs_v2",
+        )
+    )
 
 
 def _pair_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -347,20 +329,9 @@ def _pair_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan |V| parquet rows. d = COUNT over both pair endpoints, i.e. the
     node's distinct-neighbor count — identical to every consumer's
     inline definition (long-typed either way: count returns long)."""
-    import time
+    from ..sources import materialize
 
-    from ..sources import (
-        artifact_is_current,
-        mark_artifact,
-        record_build_seconds,
-        scratch_dir,
-        table_fingerprint,
-    )
-
-    deg_path = scratch_dir(sf_dir, "coorder") + "/deg"
-    fp = table_fingerprint(sf_dir, "lineitem", params="coorder_deg_v1")
-    if not artifact_is_current(deg_path, fp):
-        t0 = time.perf_counter()
+    def build(path: str) -> None:
         pairs = _coorder_pairs(spark, sf_dir)
         (
             pairs.select(F.col("u").alias("node"))
@@ -368,11 +339,18 @@ def _pair_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("node")
             .agg(F.count(F.lit(1)).alias("d"))
             .write.mode("overwrite")
-            .parquet(deg_path)
+            .parquet(path)
         )
-        record_build_seconds("coorder_deg", time.perf_counter() - t0)
-        mark_artifact(deg_path, fp)
-    return spark.read.parquet(deg_path)
+
+    return spark.read.parquet(
+        materialize(
+            sf_dir,
+            "coorder_deg",
+            build,
+            tables=("lineitem",),
+            params="coorder_deg_v1",
+        )
+    )
 
 
 _BFS_ORACLE = """

@@ -2854,23 +2854,24 @@ def j_star_prune_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning removes 3/5 of the fact before any IO; nation (25 rows)
     broadcasts at any scale, customer would shuffle-hash-join at real
     scale exactly as this declarative plan lets AQE decide."""
-    from ..sources import (
-        artifact_is_current,
-        mark_artifact,
-        scratch_dir,
-        table_fingerprint,
-    )
+    from ..sources import materialize
 
-    path = scratch_dir(sf_dir, "orders_by_priority")
-    fp = table_fingerprint(sf_dir, "orders", params="star-prune-v1")
-    if not artifact_is_current(path, fp):
-        load_table(spark, sf_dir, "orders").select(
+    path = materialize(
+        sf_dir,
+        "orders_by_priority",
+        lambda p: load_table(spark, sf_dir, "orders")
+        .select(
             "o_orderkey",
             "o_custkey",
             cents(F.col("o_totalprice")).alias("price_cents"),
             "o_orderpriority",
-        ).write.mode("overwrite").partitionBy("o_orderpriority").parquet(path)
-        mark_artifact(path, fp)
+        )
+        .write.mode("overwrite")
+        .partitionBy("o_orderpriority")
+        .parquet(p),
+        tables=("orders",),
+        params="star-prune-v1",
+    )
     fact = spark.read.parquet(path).filter(
         F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     )
@@ -3135,17 +3136,11 @@ def j_asof_sink_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fact sink models the staged ingest layer. The asof rewrite is
     one sort per class; integer basis-point math per row."""
     from ..operators.asof import asof_join
-    from ..sources import (
-        artifact_is_current,
-        mark_artifact,
-        scratch_dir,
-        table_fingerprint,
-    )
+    from ..sources import materialize
 
     pris = [("1-URGENT", 0), ("2-HIGH", 1)]
-    idx_path = scratch_dir(sf_dir, "rate_index_by_pri")
-    idx_fp = table_fingerprint(sf_dir, params="asof-sink-idx-v1")
-    if not artifact_is_current(idx_path, idx_fp):
+
+    def build_index(path: str) -> None:
         idx = (
             spark.range(84)
             .filter(F.col("id") % 3 == 1)
@@ -3170,19 +3165,26 @@ def j_asof_sink_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("index_bp"),
             )
         )
-        idx.write.mode("overwrite").partitionBy("pri").parquet(idx_path)
-        mark_artifact(idx_path, idx_fp)
-    fact_path = scratch_dir(sf_dir, "express_orders_plain")
-    fact_fp = table_fingerprint(sf_dir, "orders", params="asof-sink-fact-v1")
-    if not artifact_is_current(fact_path, fact_fp):
-        load_table(spark, sf_dir, "orders").filter(
-            F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-        ).select(
+        idx.write.mode("overwrite").partitionBy("pri").parquet(path)
+
+    idx_path = materialize(
+        sf_dir, "rate_index_by_pri", build_index, params="asof-sink-idx-v1"
+    )
+    fact_path = materialize(
+        sf_dir,
+        "express_orders_plain",
+        lambda p: load_table(spark, sf_dir, "orders")
+        .filter(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
+        .select(
             F.col("o_orderpriority").alias("pri"),
             "o_orderdate",
             cents(F.col("o_totalprice")).alias("price_cents"),
-        ).write.mode("overwrite").parquet(fact_path)
-        mark_artifact(fact_path, fact_fp)
+        )
+        .write.mode("overwrite")
+        .parquet(p),
+        tables=("orders",),
+        params="asof-sink-fact-v1",
+    )
     idx_back = spark.read.parquet(idx_path).filter(
         F.col("pri").isin("1-URGENT", "2-HIGH")
     ).select("pri", "snap_date", "index_bp")

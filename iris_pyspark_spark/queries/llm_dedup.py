@@ -7,6 +7,8 @@ runs the dedup operator — exercising the operator against known truth.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -20,6 +22,7 @@ from ..operators.dedup import (
     simhash_near_pairs,
 )
 from ..registry import register
+from ..sources import materialize
 
 
 @register(
@@ -146,20 +149,31 @@ def _near_dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.unionByName(variants).repartition(F.col("doc_id"))
 
 
+def _neardup_minhash_artifact(sf_dir: str):
+    """The MinHash(k=3, 32 hashes) signature artifact of the near-dup
+    corpus, as lsh_candidate_pairs' `signature_artifact`. n_minhash_lsh,
+    n_dedup_method_agreement and the calibration audit share this ONE
+    name and fingerprint for identical signature contents — divergent
+    params strings made each consumer invalidate and rebuild the
+    artifact the others were serving (ADVICE r11)."""
+    return partial(
+        materialize,
+        sf_dir,
+        "minhash_signatures",
+        tables=("documents",),
+        params="neardup-k3-h32",
+    )
+
+
 # MinHash uses xxhash64, which DuckDB lacks → deterministic rows-only.
 @register("n_minhash_lsh", oracle=None, tags=("N2",), headline=True)
 def n_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(32 hashes) + LSH(8 bands × 4 rows) candidate pairs over a
     corpus with 50 planted near-dups. Fixed hash seeds → deterministic."""
-    from ..sources import scratch_dir, table_fingerprint
-
     corpus = _near_dup_corpus(spark, sf_dir)
     pairs = lsh_candidate_pairs(
         corpus, "doc_id", "text", shingle_k=3, num_hashes=32, bands=8,
-        materialize_path=scratch_dir(sf_dir, "minhash_signatures"),
-        materialize_fingerprint=table_fingerprint(
-            sf_dir, "documents", params="neardup-k3-h32"
-        ),
+        signature_artifact=_neardup_minhash_artifact(sf_dir),
     )
     # Rows-only self-validation (map-only, nothing added to the LSH hot
     # path): `planted` marks the 50 known near-dup pairs (variant id =
@@ -310,28 +324,21 @@ def _neardup_simhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     simhash64_table re-runs once per consumer. Codegen table form —
     identical values to the simhash64() fold, without the interpreted
     lambdas."""
-    from ..sources import (
-        artifact_is_current,
-        mark_artifact,
-        scratch_dir,
-        table_fingerprint,
-    )
-
-    sig_path = scratch_dir(sf_dir, "simhash_sigs")
-    fp = table_fingerprint(sf_dir, "documents", params="simhash64-neardup")
-    if not artifact_is_current(sig_path, fp):
-        import time
-
-        from ..sources import record_build_seconds
-
-        t0 = time.perf_counter()
+    def build(path: str) -> None:
         corpus = _near_dup_corpus(spark, sf_dir)
         simhash64_table(corpus, "doc_id", "text").write.mode("overwrite").parquet(
-            sig_path
+            path
         )
-        record_build_seconds("simhash_sigs", time.perf_counter() - t0)
-        mark_artifact(sig_path, fp)
-    return spark.read.parquet(sig_path)
+
+    return spark.read.parquet(
+        materialize(
+            sf_dir,
+            "simhash_sigs",
+            build,
+            tables=("documents",),
+            params="simhash64-neardup",
+        )
+    )
 
 
 @register("n_simhash", oracle=None, tags=("N2",))
@@ -1431,11 +1438,15 @@ def n_lsh_parameter_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     from ..operators.dedup import lsh_candidate_pairs
-    from ..sources import scratch_dir, table_fingerprint
 
     d = load_table(spark, sf_dir, "documents")
-    sig_path = scratch_dir(sf_dir, "lsh_sweep") + "/signatures"
-    fp = table_fingerprint(sf_dir, "documents", params="k3_h32_sweep")
+    sigs = partial(
+        materialize,
+        sf_dir,
+        "lsh_sweep_signatures",
+        tables=("documents",),
+        params="k3_h32_sweep",
+    )
     outs = []
     for bands in (4, 8, 16):
         pairs = lsh_candidate_pairs(
@@ -1445,8 +1456,7 @@ def n_lsh_parameter_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
             shingle_k=3,
             num_hashes=32,
             bands=bands,
-            materialize_path=sig_path,
-            materialize_fingerprint=fp,
+            signature_artifact=sigs,
             # Counts only — skip the est_jaccard signature re-attach
             # joins (round 11; they survive column pruning otherwise).
             with_estimate=False,
@@ -1512,23 +1522,15 @@ def n_dedup_method_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         lsh_candidate_pairs,
         simhash_near_pairs,
     )
-    from ..sources import scratch_dir, table_fingerprint
 
     corpus = _near_dup_corpus(spark, sf_dir)
-    sig_path = scratch_dir(sf_dir, "minhash_signatures")
-    fp = table_fingerprint(sf_dir, "documents", params="neardup-k3-h32")
     mh = lsh_candidate_pairs(
         corpus, "doc_id", "text",
-        materialize_path=sig_path, materialize_fingerprint=fp,
+        signature_artifact=_neardup_minhash_artifact(sf_dir),
         # Set algebra over bare (id_a, id_b) — no est_jaccard needed,
         # so skip the signature re-attach joins (round 11).
         with_estimate=False,
     ).select("id_a", "id_b")
-    # NOTE the fp params match n_minhash_lsh's exactly (same corpus,
-    # same k/h): the two queries share one signature artifact instead
-    # of invalidating each other's (they previously used different
-    # params strings for identical contents, so running one always
-    # rebuilt over the other's artifact).
     # Shared per-process SimHash signature artifact (round 11): this
     # audit consumes the signature table three times (pair join + both
     # stats legs); the parquet-backed frame makes each a plain scan.
@@ -1758,20 +1760,11 @@ def n_minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame
     LSH candidates (the bounded set), via the token equi-join, never
     all pairs."""
     from ..operators.dedup import lsh_candidate_pairs
-    from ..sources import scratch_dir, table_fingerprint
 
     corpus = _near_dup_corpus(spark, sf_dir)
     est = lsh_candidate_pairs(
         corpus, "doc_id", "text",
-        materialize_path=scratch_dir(sf_dir, "minhash_signatures"),
-        # Same params string as n_minhash_lsh / n_dedup_method_agreement:
-        # all three consumers share ONE fingerprint for the identical
-        # signature contents at this path — a divergent string here made
-        # this query invalidate and rebuild the artifact the other two
-        # were serving (ADVICE r11).
-        materialize_fingerprint=table_fingerprint(
-            sf_dir, "documents", params="neardup-k3-h32"
-        ),
+        signature_artifact=_neardup_minhash_artifact(sf_dir),
     ).select("id_a", "id_b", "est_jaccard")
     toks = corpus.select(
         "doc_id",

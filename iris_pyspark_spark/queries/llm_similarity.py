@@ -136,13 +136,15 @@ def _materialized_ivf_assignment(
     parquet + the mod-50 centroid scheme — a regenerated sf_dir or a
     changed scheme rebuilds instead of serving stale cells); return the
     parquet-backed frame either way."""
-    from ..sources import artifact_is_current, mark_artifact, scratch_dir, table_fingerprint
+    from ..sources import materialize
 
-    ivf_path = scratch_dir(sf_dir, "ivf_assignment")
-    fp = table_fingerprint(sf_dir, "embeddings", params="ivf-centroids-mod50")
-    if not artifact_is_current(ivf_path, fp):
-        assigned.write.mode("overwrite").parquet(ivf_path)
-        mark_artifact(ivf_path, fp)
+    ivf_path = materialize(
+        sf_dir,
+        "ivf_assignment",
+        lambda path: assigned.write.mode("overwrite").parquet(path),
+        tables=("embeddings",),
+        params="ivf-centroids-mod50",
+    )
     return spark.read.parquet(ivf_path)
 
 

@@ -544,23 +544,9 @@ def _bm25_scored_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     never re-tokenizes the corpus per query — the inverted index IS the
     product — and the per-query work here is joins over the index, the
     same artifact discipline as the IVF/LSH indexes."""
-    from ..sources import (
-        artifact_is_current,
-        mark_artifact,
-        scratch_dir,
-        table_fingerprint,
-    )
+    from ..sources import materialize
 
-    idx = scratch_dir(sf_dir, "bm25_index")
-    fp = table_fingerprint(
-        sf_dir, "documents", params="bm25_v1_" + "_".join(_BM25_TERMS)
-    )
-    if not artifact_is_current(idx, fp):
-        import time
-
-        from ..sources import record_build_seconds
-
-        t0 = time.perf_counter()
+    def build(path: str) -> None:
         d = load_table(spark, sf_dir, "documents")
         toks = d.select("doc_id", F.explode(tokens("text")).alias("tok"))
         toks.groupBy("doc_id").agg(
@@ -571,9 +557,15 @@ def _bm25_scored_df(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias(f"tf_{i}")
                 for i, t in enumerate(_BM25_TERMS)
             ],
-        ).write.mode("overwrite").parquet(idx)
-        record_build_seconds("bm25_index", time.perf_counter() - t0)
-        mark_artifact(idx, fp)
+        ).write.mode("overwrite").parquet(path)
+
+    idx = materialize(
+        sf_dir,
+        "bm25_index",
+        build,
+        tables=("documents",),
+        params="bm25_v1_" + "_".join(_BM25_TERMS),
+    )
     # Wide-row scoring (round 11): the index row already holds every
     # per-doc input (dl, tf per query term), so scoring is ONE index
     # scan + a single-row broadcast of (n_docs, avgdl, df per term) + a
@@ -839,25 +831,9 @@ def n_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-tokenizes the corpus per consumer (a CTE is not a
     materialization barrier); same artifact discipline as the MinHash
     signature table."""
-    from ..sources import (
-        artifact_is_current,
-        mark_artifact,
-        record_build_seconds,
-        scratch_dir,
-        table_fingerprint,
-    )
+    from ..sources import materialize
 
-    bigrams_path = scratch_dir(sf_dir, "bigram_table")
-    # Fingerprinted per-process artifact (round 12; same discipline as
-    # the MinHash signature table): the exploded bigram table feeds four
-    # consumers in THIS query and rebuilds were previously unconditional,
-    # so every re-run in a process (bench min-of-N, a second consumer)
-    # re-tokenized the corpus and re-wrote the parquet.
-    fp = table_fingerprint(sf_dir, "documents", params="bigram_table_v1")
-    if not artifact_is_current(bigrams_path, fp):
-        import time
-
-        t0 = time.perf_counter()
+    def build(path: str) -> None:
         d = load_table(spark, sf_dir, "documents")
         t = F.split(F.lower(F.col("text")), " ")
         d.select(
@@ -870,10 +846,21 @@ def n_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("bg"),
         ).select(
             "doc_id", F.col("bg.0").alias("w1"), F.col("bg.1").alias("w2")
-        ).write.mode("overwrite").parquet(bigrams_path)
-        record_build_seconds("bigram_table", time.perf_counter() - t0)
-        mark_artifact(bigrams_path, fp)
-    bigrams = spark.read.parquet(bigrams_path)
+        ).write.mode("overwrite").parquet(path)
+
+    # Fingerprinted per-process artifact (round 12; same discipline as
+    # the MinHash signature table): the exploded bigram table feeds four
+    # consumers in THIS query, so a re-run in a process (bench min-of-N,
+    # a second consumer) must not re-tokenize the corpus.
+    bigrams = spark.read.parquet(
+        materialize(
+            sf_dir,
+            "bigram_table",
+            build,
+            tables=("documents",),
+            params="bigram_table_v1",
+        )
+    )
     c2 = bigrams.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     c1 = bigrams.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
     v = (

@@ -25,7 +25,7 @@ from pyspark.sql import types as T
 from ..catalog import load_table
 from ..operators.skew import salted_agg, salted_join
 from ..registry import register
-from ..sources import scratch_dir
+from ..sources import materialize, scratch_dir
 from .joins import CENTS_SQL, cents
 
 #: Skewed key derivation: half of all events collapse onto user 1.
@@ -216,15 +216,13 @@ def s_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "n_chars", "lang"
     )
-    path = scratch_dir(sf_dir, "documents_dpp_by_lang")
-    from ..sources import artifact_is_current, mark_artifact, table_fingerprint
-
-    # _SUCCESS marker + input fingerprint: an interrupted write or a
-    # regenerated documents.parquet must both trigger a rebuild.
-    fp = table_fingerprint(sf_dir, "documents", params="dpp-by-lang")
-    if not artifact_is_current(path, fp):
-        docs.write.mode("overwrite").partitionBy("lang").parquet(path)
-        mark_artifact(path, fp)
+    path = materialize(
+        sf_dir,
+        "documents_dpp_by_lang",
+        lambda p: docs.write.mode("overwrite").partitionBy("lang").parquet(p),
+        tables=("documents",),
+        params="dpp-by-lang",
+    )
     fact = spark.read.parquet(path)
     dim = spark.createDataFrame(
         [

@@ -14,7 +14,7 @@ from pyspark.sql import types as T
 
 from ..catalog import load_table
 from ..registry import register
-from ..sources import scratch_dir
+from ..sources import materialize, scratch_dir
 
 # --- S2: CSV scan (schema-inferred, the reference's Iris-CSV idiom) --------
 
@@ -492,11 +492,11 @@ def s_recursive_glob_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes non-data files before any footer read."""
     import os
 
-    root = scratch_dir(sf_dir, "nested_zone")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    if not os.path.exists(os.path.join(root, "_STAGED")):
+
+    def stage(root: str) -> None:
         docs.filter(F.col("doc_id") % 3 == 0).write.mode("overwrite").parquet(
             root + "/2024/01/batch-a"
         )
@@ -509,7 +509,12 @@ def s_recursive_glob_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         # sidecar junk the glob must ignore
         with open(os.path.join(root, "2024", "01", "manifest.txt"), "w") as f:
             f.write("not data\n")
-        open(os.path.join(root, "_STAGED"), "w").close()
+        # The tree is complete only once all three batches are down.
+        open(os.path.join(root, "_SUCCESS"), "w").close()
+
+    root = materialize(
+        sf_dir, "nested_zone", stage, tables=("documents",), params="nested-v1"
+    )
     back = (
         spark.read.option("recursiveFileLookup", True)
         .option("pathGlobFilter", "*.parquet")
@@ -1597,19 +1602,14 @@ def s_file_metadata_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     and `size_ok` pins a positive on-disk size for every file."""
     from pyspark.sql.window import Window
 
-    from ..sources import (
-        artifact_is_current,
-        mark_artifact,
-        scratch_dir,
-        table_fingerprint,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
-    path = scratch_dir(sf_dir, "meta4files")
-    fp = table_fingerprint(sf_dir, "documents", params="n=4")
-    if not artifact_is_current(path, fp):
-        docs.repartition(4).write.mode("overwrite").parquet(path)
-        mark_artifact(path, fp)
+    path = materialize(
+        sf_dir,
+        "meta4files",
+        lambda p: docs.repartition(4).write.mode("overwrite").parquet(p),
+        tables=("documents",),
+        params="n=4",
+    )
     total = docs.count()
     per_file = (
         spark.read.parquet(path)
@@ -1772,16 +1772,16 @@ def s_parquet_storage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pyarrow.parquet as _pq
 
-    from ..sources import artifact_is_current, mark_artifact, scratch_dir, table_fingerprint
-
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_quantity"
     )
-    path = scratch_dir(sf_dir, "storage_report_lineitem")
-    fp = table_fingerprint(sf_dir, "lineitem", params="storage-report-v1")
-    if not artifact_is_current(path, fp):
-        li.coalesce(1).write.mode("overwrite").parquet(path)
-        mark_artifact(path, fp)
+    path = materialize(
+        sf_dir,
+        "storage_report_lineitem",
+        lambda p: li.coalesce(1).write.mode("overwrite").parquet(p),
+        tables=("lineitem",),
+        params="storage-report-v1",
+    )
     part_file = sorted(_glob.glob(path + "/part-*.parquet"))[0]
     md = _pq.ParquetFile(part_file).metadata
     rows = []
@@ -1868,22 +1868,16 @@ def s_type_widening_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     happens inside the columnar reader, not as a post-scan Project."""
     from pyspark.sql import types as T
 
-    from ..sources import artifact_is_current, mark_artifact, scratch_dir, table_fingerprint
-
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber")
-    pa = scratch_dir(sf_dir, "widen_int32")
-    pb = scratch_dir(sf_dir, "widen_int64")
-    fp = table_fingerprint(sf_dir, "lineitem", params="type-widen-v1")
-    if not artifact_is_current(pa, fp):
-        li.filter(F.col("l_orderkey") % 2 == 0).select(
-            "l_orderkey", F.col("l_linenumber").cast("int").alias("qty_like")
-        ).write.mode("overwrite").parquet(pa)
-        mark_artifact(pa, fp)
-    if not artifact_is_current(pb, fp):
-        li.filter(F.col("l_orderkey") % 2 == 1).select(
-            "l_orderkey", F.col("l_linenumber").cast("long").alias("qty_like")
-        ).write.mode("overwrite").parquet(pb)
-        mark_artifact(pb, fp)
+
+    def half(parity: int, qty_type: str):
+        return lambda p: li.filter(F.col("l_orderkey") % 2 == parity).select(
+            "l_orderkey", F.col("l_linenumber").cast(qty_type).alias("qty_like")
+        ).write.mode("overwrite").parquet(p)
+
+    inputs = {"tables": ("lineitem",), "params": "type-widen-v1"}
+    pa = materialize(sf_dir, "widen_int32", half(0, "int"), **inputs)
+    pb = materialize(sf_dir, "widen_int64", half(1, "long"), **inputs)
     widened = T.StructType(
         [
             T.StructField("l_orderkey", T.LongType()),
@@ -2266,13 +2260,10 @@ def s_json_multiline_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json as _json
     import os
 
-    from ..sources import artifact_is_current, mark_artifact, table_fingerprint
-
     nation = load_table(spark, sf_dir, "nation")
-    out = scratch_dir(sf_dir, "json_multiline")
-    doc = os.path.join(out, "nations.json")
-    fp = table_fingerprint(sf_dir, "nation", params="json-multiline")
-    if not artifact_is_current(doc, fp):
+
+    def build(doc: str) -> None:
+        out = os.path.dirname(doc)
         os.makedirs(out, exist_ok=True)
         jsonl_dir = os.path.join(out, "_jsonl")
         nation.select("n_nationkey", "n_name", "n_regionkey").coalesce(
@@ -2287,7 +2278,14 @@ def s_json_multiline_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(tmp, "w") as f:
             _json.dump(rows, f, indent=2)
         os.replace(tmp, doc)
-        mark_artifact(doc, fp)
+
+    doc = materialize(
+        sf_dir,
+        "json_multiline/nations.json",
+        build,
+        tables=("nation",),
+        params="json-multiline",
+    )
     back = (
         spark.read.option("multiLine", "true")
         .schema("n_nationkey BIGINT, n_name STRING, n_regionkey BIGINT")
@@ -2413,22 +2411,20 @@ def s_jsonl_props_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: JSONL splits on newlines at any byte offset, so a 100 TB
     landing zone fans out to maxPartitionBytes-sized tasks;
     get_json_object is a codegen scalar (one pass, no UDF)."""
-    import os
-
-    from ..sources import artifact_is_current, mark_artifact, table_fingerprint
-
     events = load_table(spark, sf_dir, "events")
-    out = scratch_dir(sf_dir, "events_jsonl")
-    fp = table_fingerprint(sf_dir, "events", params="jsonl-v1")
-    if not artifact_is_current(out, fp):
-        events.select(
+    out = materialize(
+        sf_dir,
+        "events_jsonl",
+        lambda p: events.select(
             "event_id",
             F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
             "event_type",
             "value",
             "props",
-        ).write.mode("overwrite").json(out)
-        mark_artifact(out, fp)
+        ).write.mode("overwrite").json(p),
+        tables=("events",),
+        params="jsonl-v1",
+    )
     back = spark.read.schema(
         "event_id BIGINT, ts_us BIGINT, event_type STRING, value DOUBLE, props STRING"
     ).json(out)
@@ -2478,20 +2474,18 @@ def s_csv_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     write shuffles nothing (partitionBy at write = per-task fan-out
     files). Values re-parsed with an explicit cast chain, not
     inferSchema, so the scan stays single-pass."""
-    import os
-
-    from ..sources import artifact_is_current, mark_artifact, table_fingerprint
-
     orders = load_table(spark, sf_dir, "orders")
-    out = scratch_dir(sf_dir, "orders_csv_part")
-    fp = table_fingerprint(sf_dir, "orders", params="csv-part-v1")
-    if not artifact_is_current(out, fp):
-        orders.select(
+    out = materialize(
+        sf_dir,
+        "orders_csv_part",
+        lambda p: orders.select(
             "o_orderkey", "o_totalprice", "o_orderdate", "o_orderpriority"
         ).write.mode("overwrite").option("header", True).partitionBy(
             "o_orderpriority"
-        ).csv(out)
-        mark_artifact(out, fp)
+        ).csv(p),
+        tables=("orders",),
+        params="csv-part-v1",
+    )
     back = spark.read.option("header", True).schema(
         "o_orderkey BIGINT, o_totalprice DOUBLE, o_orderdate DATE, "
         "o_orderpriority STRING"

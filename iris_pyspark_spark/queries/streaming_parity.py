@@ -256,19 +256,20 @@ def st_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from ..sources import scratch_dir
     from ..session import configure
+    from ..sources import materialize, scratch_dir
 
     configure(spark)
-    src = scratch_dir(sf_dir, "fb_src")
-    from ..sources import artifact_is_current, mark_artifact, table_fingerprint
-
-    src_fp = table_fingerprint(sf_dir, "events", params="fb-src-4part")
-    if not artifact_is_current(src, src_fp):
-        load_table(spark, sf_dir, "events").repartition(4).write.mode(
-            "overwrite"
-        ).parquet(src)
-        mark_artifact(src, src_fp)
+    src = materialize(
+        sf_dir,
+        "fb_src",
+        lambda p: load_table(spark, sf_dir, "events")
+        .repartition(4)
+        .write.mode("overwrite")
+        .parquet(p),
+        tables=("events",),
+        params="fb-src-4part",
+    )
     artifact = scratch_dir(sf_dir, "fb_artifact")
     stage = scratch_dir(sf_dir, "fb_artifact_stage")
     # Fresh artifact AND checkpoint per run: a checkpoint surviving a
@@ -1198,24 +1199,21 @@ def st_foreachbatch_merge_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     from ..session import configure
-    from ..sources import (
-        artifact_is_current,
-        mark_artifact,
-        scratch_dir,
-        table_fingerprint,
-    )
+    from ..sources import materialize, scratch_dir
 
     configure(spark)
-    src = scratch_dir(sf_dir, "scd2_src")
-    src_fp = table_fingerprint(sf_dir, "events", params="scd2-src-4wnd")
-    if not artifact_is_current(src, src_fp):
+
+    def stage(path: str) -> None:
         e = load_table(spark, sf_dir, "events").withColumn(
             "wnd", F.floor((F.dayofmonth("ts") - 1) / 8).cast("bigint")
         )
         e.repartition("wnd").write.mode("overwrite").partitionBy(
             "wnd"
-        ).parquet(src)
-        mark_artifact(src, src_fp)
+        ).parquet(path)
+
+    src = materialize(
+        sf_dir, "scd2_src", stage, tables=("events",), params="scd2-src-4wnd"
+    )
     dim = scratch_dir(sf_dir, "scd2_dim_obs")
     shutil.rmtree(dim, ignore_errors=True)
     ckpt = scratch_dir(sf_dir, "scd2_ckpt_tmp")
@@ -1584,21 +1582,20 @@ def st_apply_state_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     from ..session import configure
-    from ..sources import (
-        artifact_is_current,
-        mark_artifact,
-        scratch_dir,
-        table_fingerprint,
-    )
+    from ..sources import materialize
 
     configure(spark)
-    src = scratch_dir(sf_dir, "aps_src")
-    src_fp = table_fingerprint(sf_dir, "events", params="aps-src-4part")
-    if not artifact_is_current(src, src_fp):
-        load_table(spark, sf_dir, "events").select(
-            "event_id", "ts", "user_id", "event_type"
-        ).repartition(4).write.mode("overwrite").parquet(src)
-        mark_artifact(src, src_fp)
+    src = materialize(
+        sf_dir,
+        "aps_src",
+        lambda p: load_table(spark, sf_dir, "events")
+        .select("event_id", "ts", "user_id", "event_type")
+        .repartition(4)
+        .write.mode("overwrite")
+        .parquet(p),
+        tables=("events",),
+        params="aps-src-4part",
+    )
     stream = (
         spark.readStream.schema(
             "event_id long, ts timestamp_ntz, user_id long, event_type string"
@@ -2274,17 +2271,11 @@ def st_apply_state_day_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import LongType, StructField, StructType
 
     from ..session import configure
-    from ..sources import (
-        artifact_is_current,
-        mark_artifact,
-        scratch_dir,
-        table_fingerprint,
-    )
+    from ..sources import materialize
 
     configure(spark)
-    src = scratch_dir(sf_dir, "aps_day_src")
-    src_fp = table_fingerprint(sf_dir, "events", params="aps-day-partials-4part")
-    if not artifact_is_current(src, src_fp):
+
+    def stage(path: str) -> None:
         (
             load_table(spark, sf_dir, "events")
             .select(
@@ -2305,9 +2296,16 @@ def st_apply_state_day_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .repartition(4)
             .write.mode("overwrite")
-            .parquet(src)
+            .parquet(path)
         )
-        mark_artifact(src, src_fp)
+
+    src = materialize(
+        sf_dir,
+        "aps_day_src",
+        stage,
+        tables=("events",),
+        params="aps-day-partials-4part",
+    )
     keyed = (
         spark.readStream.schema(
             "user_id long, epoch_day long, n long, mn long, mx long"
@@ -2830,17 +2828,11 @@ def _stage_aps_census_src(spark: SparkSession, sf_dir: str) -> str:
     exercised in the family. Money enters the partials as exact integer
     cents BEFORE summing — identical totals to summing per event."""
     from ..session import configure
-    from ..sources import (
-        artifact_is_current,
-        mark_artifact,
-        scratch_dir,
-        table_fingerprint,
-    )
+    from ..sources import materialize
 
     configure(spark)
-    src = scratch_dir(sf_dir, "aps_census_src_r11")
-    fp = table_fingerprint(sf_dir, "events", params="aps-census-partials-r12-4part")
-    if not artifact_is_current(src, fp):
+
+    def stage(path: str) -> None:
         (
             load_table(spark, sf_dir, "events")
             .select(
@@ -2860,10 +2852,16 @@ def _stage_aps_census_src(spark: SparkSession, sf_dir: str) -> str:
             )
             .repartition(4)
             .write.mode("overwrite")
-            .parquet(src)
+            .parquet(path)
         )
-        mark_artifact(src, fp)
-    return src
+
+    return materialize(
+        sf_dir,
+        "aps_census_src_r11",
+        stage,
+        tables=("events",),
+        params="aps-census-partials-r12-4part",
+    )
 
 
 _STATE_TYPE_ORACLE = """

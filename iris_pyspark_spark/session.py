@@ -123,9 +123,10 @@ _GC_DONE = False
 
 
 def _gc_scratch_once() -> None:
-    """Once per process: size-capped sweep of the persistent scratch
-    root (fingerprinted artifacts accumulate across rounds with no
-    natural expiry — see sources.gc_scratch)."""
+    """Once per process: remove the scratch trees of exited processes
+    (scratch paths and fingerprints are scoped by a per-process token,
+    so a dead process's tree can never be reused — see
+    sources.gc_scratch). Live processes' trees are never touched."""
     global _GC_DONE
     if _GC_DONE:
         return
@@ -138,8 +139,8 @@ def _gc_scratch_once() -> None:
             import warnings
 
             warnings.warn(
-                f"scratch GC evicted {len(deleted)} artifact dirs over the "
-                "2 GiB cap (rebuilt on next use)",
+                f"scratch GC removed {len(deleted)} scratch trees of "
+                "exited processes",
                 RuntimeWarning,
                 stacklevel=2,
             )

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import configure
-from ..sources import scratch_dir
+from ..sources import materialize
 
 def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
     """Explicit source schema; `ts_type` matches what the parquet scan
@@ -68,15 +68,18 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The file stream source monitors a DIRECTORY; the test data is a
     # single parquet file, so stage it into a scratch dir once. (A real
     # deployment's landing zone is already a directory of files.)
-    src = scratch_dir(sf_dir, "events_stream_src")
-    staged = os.path.join(src, "events.parquet")
-    if not os.path.exists(staged):
+    def stage(src: str) -> None:
         os.makedirs(src, exist_ok=True)
-        # Copy to a temp name + atomic rename: an interrupted copy must
-        # not leave a truncated file that exists-checks would then trust.
-        tmp = staged + ".tmp"
-        shutil.copy2(f"{sf_dir}/events.parquet", tmp)
-        os.replace(tmp, staged)
+        shutil.copy2(f"{sf_dir}/events.parquet", os.path.join(src, "events.parquet"))
+        # Completeness marker, written after the copy. The file source
+        # skips `_`-prefixed names, so it is never read as data (the
+        # fingerprint sidecar sits beside the directory, not in it).
+        open(os.path.join(src, "_SUCCESS"), "w").close()
+
+    src = materialize(
+        sf_dir, "events_stream_src", stage, tables=("events",), params="stream-src-v1"
+    )
+    staged = os.path.join(src, "events.parquet")
     # Probe the batch-read type of ts for this data generation (cheap:
     # footer read only, no job).
     probed = spark.read.parquet(staged).schema["ts"].dataType

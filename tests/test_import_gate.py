@@ -103,6 +103,30 @@ def test_registered_query_body_imports_resolve():
     assert not problems, "\n".join(problems)
 
 
+def test_scratch_artifacts_go_through_materialize():
+    """Every scratch-artifact build goes through sources.materialize,
+    which owns the check → build → record → mark sequence: no module
+    outside sources/ may call the pieces itself (a hand-rolled build
+    would skip ARTIFACT_BUILD_SECONDS or the completeness rules)."""
+    import re
+
+    pkg = os.path.dirname(inspect.getfile(load_all))
+    banned = re.compile(r"\b(artifact_is_current|mark_artifact|record_build_seconds)\b")
+    hits = []
+    for dirpath, _dirnames, filenames in os.walk(pkg):
+        if os.path.relpath(dirpath, pkg).split(os.sep)[0] == "sources":
+            continue
+        for fname in filenames:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            with open(path) as f:
+                for lineno, line in enumerate(f, 1):
+                    if banned.search(line):
+                        hits.append(f"{os.path.relpath(path, pkg)}:{lineno}: {line.strip()}")
+    assert not hits, "\n".join(hits)
+
+
 def test_readme_coverage_table_in_sync():
     """The README operator-coverage table must match the registry at
     HEAD: registering a query without re-running

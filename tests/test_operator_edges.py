@@ -399,88 +399,98 @@ def test_artifact_fingerprint_gates_reuse(tmp_path, sf_dir):
     assert not artifact_is_current(art, fp_embed)
 
 
-def test_scratch_gc_evicts_lru_over_cap(tmp_path):
-    """gc_scratch must (a) be a no-op under the cap, (b) evict the
-    LEAST-recently-validated artifact first once over it, and (c) stop
-    as soon as the root is back under the cap — never a full wipe."""
+def test_materialize_builds_once_and_records_seconds(tmp_path, sf_dir, monkeypatch):
+    """`materialize` runs `build` only when no current artifact exists:
+    the same inputs are served, changed params rebuild, a build that
+    raises leaves no sidecar (so the next call rebuilds), and every
+    build's seconds land in ARTIFACT_BUILD_SECONDS under its name."""
     import os
     import time
 
-    from iris_pyspark_spark.sources import gc_scratch, mark_artifact
+    import pytest
 
-    root = str(tmp_path / "scratch")
-    paths = {}
-    for i, name in enumerate(["old", "mid", "new"]):
-        p = os.path.join(root, "sf0.01", name)
-        os.makedirs(p)
-        with open(os.path.join(p, "part-0.parquet"), "wb") as f:
-            f.write(b"x" * 1000)
-        open(os.path.join(p, "_SUCCESS"), "w").close()
-        mark_artifact(p, f"fp-{name}")
-        # Stagger "last validated" clocks: old < mid < new.
-        t = time.time() - (3 - i) * 3600
-        os.utime(p + ".fingerprint", (t, t))
-        paths[name] = p
+    from iris_pyspark_spark import sources
 
-    # Under the cap: nothing deleted.
-    assert gc_scratch(cap_bytes=1 << 20, root=root) == []
-    assert all(os.path.isdir(p) for p in paths.values())
+    monkeypatch.setattr(sources, "SCRATCH_ROOT", str(tmp_path))
+    monkeypatch.setattr(sources, "ARTIFACT_BUILD_SECONDS", {})
+    builds: list[str] = []
 
-    # Cap of ~2 files: the single oldest-validated artifact goes, the
-    # other two (and their sidecars) survive.
-    deleted = gc_scratch(cap_bytes=2100, root=root)
-    assert deleted == [paths["old"]]
-    assert not os.path.exists(paths["old"])
-    assert not os.path.exists(paths["old"] + ".fingerprint")
-    for name in ("mid", "new"):
-        assert os.path.isdir(paths[name])
-        assert os.path.exists(paths[name] + ".fingerprint")
-
-
-def test_scratch_gc_scores_nested_sidecars_and_skips_loose_files(tmp_path):
-    """Two regressions from the round-5 advice: (a) an eviction unit
-    whose artifact (and sidecar) lives NESTED one level down (the
-    scratch/<sf>/coorder/pairs layout) must be scored by that nested
-    sidecar's mtime, not the never-updated unit dir mtime — else the
-    most frequently revalidated artifact is evicted first; (b) loose
-    files directly under the root are not eviction units and must not
-    count toward the cap (they could push `total` over a cap the
-    evictable set can never get back under)."""
-    import os
-    import time
-
-    from iris_pyspark_spark.sources import gc_scratch, mark_artifact
-
-    root = str(tmp_path / "scratch")
-
-    def make_leaf(path: str, stamp: float) -> None:
-        os.makedirs(path)
-        with open(os.path.join(path, "part-0.parquet"), "wb") as f:
-            f.write(b"x" * 1000)
+    def build(path: str) -> None:
+        time.sleep(0.01)
+        os.makedirs(path, exist_ok=True)
         open(os.path.join(path, "_SUCCESS"), "w").close()
-        mark_artifact(path, "fp")
-        os.utime(path + ".fingerprint", (stamp, stamp))
+        builds.append(path)
 
-    now = time.time()
-    # `nested`: unit dir is old, but its depth-2 artifact was validated
-    # just now. `flat`: validated an hour ago.
-    nested_unit = os.path.join(root, "sf0.01", "coorder")
-    make_leaf(os.path.join(nested_unit, "pairs"), now)
-    old_dir = (now - 7200, now - 7200)
-    os.utime(nested_unit, old_dir)
-    flat = os.path.join(root, "sf0.01", "flat")
-    make_leaf(flat, now - 3600)
-    # A loose root-level file big enough to hold `total` over the cap
-    # forever if it were (wrongly) counted.
-    with open(os.path.join(root, "stray.log"), "wb") as f:
-        f.write(b"y" * 10_000)
+    def broken(path: str) -> None:
+        raise RuntimeError("build failed")
 
-    deleted = gc_scratch(cap_bytes=1500, root=root)
-    # The stale flat artifact goes; the freshly-validated nested one
-    # survives; the loose file is untouched and didn't wedge the sweep.
-    assert deleted == [flat]
-    assert os.path.isdir(nested_unit)
-    assert os.path.exists(os.path.join(root, "stray.log"))
+    def run(params: str, fn=build) -> str:
+        return sources.materialize(
+            sf_dir, "unit/artifact", fn, tables=("documents",), params=params
+        )
+
+    path = run("v1")
+    assert path == sources.scratch_dir(sf_dir, "unit/artifact")
+    assert builds == [path]
+    assert sources.ARTIFACT_BUILD_SECONDS["unit/artifact"] >= 0.01
+    # Same inputs: served as is.
+    assert run("v1") == path
+    assert len(builds) == 1
+    # Changed params: rebuilt, and the seconds accumulate.
+    first = sources.ARTIFACT_BUILD_SECONDS["unit/artifact"]
+    run("v2")
+    assert len(builds) == 2
+    assert sources.ARTIFACT_BUILD_SECONDS["unit/artifact"] > first
+    # A failed build leaves no sidecar; the next call rebuilds.
+    with pytest.raises(RuntimeError):
+        run("v3", broken)
+    assert not os.path.exists(path + ".fingerprint")
+    run("v3")
+    assert len(builds) == 3
+    assert run("v3") == path and len(builds) == 3
+
+
+def test_scratch_gc_removes_only_dead_owners_trees(tmp_path):
+    """gc_scratch deletes a <root>/<sf>/<token> tree exactly when the
+    pid in its token is no longer running: a finished child's tree
+    goes; this process's tree, a live process's tree and loose files
+    (at the root and beside the token trees) stay."""
+    import os
+    import subprocess
+    import sys
+
+    from iris_pyspark_spark import sources
+
+    child = subprocess.Popen([sys.executable, "-c", "pass"])
+    child.wait(timeout=60)
+    live = subprocess.Popen([sys.executable, "-c", "import time; time.sleep(60)"])
+    try:
+        root = str(tmp_path / "scratch")
+        trees = {
+            "dead": f"p{child.pid}-0123456789",
+            "live": f"p{live.pid}-abcdef0123",
+            "own": sources._PROC_TOKEN,
+        }
+        for token in trees.values():
+            art = os.path.join(root, "sf0.01", token, "coorder", "pairs")
+            os.makedirs(art)
+            open(os.path.join(art, "_SUCCESS"), "w").close()
+            sources.mark_artifact(art, "fp")
+        loose = [os.path.join(root, "stray.log"), os.path.join(root, "sf0.01", "notes.txt")]
+        for f in loose:
+            open(f, "w").close()
+
+        deleted = sources.gc_scratch(root=root)
+
+        dead = os.path.join(root, "sf0.01", trees["dead"])
+        assert deleted == [dead]
+        assert not os.path.exists(dead)
+        for key in ("live", "own"):
+            assert os.path.isdir(os.path.join(root, "sf0.01", trees[key], "coorder", "pairs"))
+        assert all(os.path.exists(f) for f in loose)
+    finally:
+        live.kill()
+        live.wait(timeout=60)
 
 
 def test_misra_gries_invariants_under_decrement(spark):
