@@ -318,6 +318,13 @@ def simhash_near_pairs(
     ~2^6x smaller buckets: ~sum_j (w_j+1)*n^2/2^w_j ~= 0.010*n^2 vs
     0.070*n^2 — ~7x fewer candidate rows shuffled, hamming-checked and
     deduplicated, at the same guaranteed recall."""
+    if max_hamming < 2:
+        # One band would be the whole 64-bit word, whose mask does not
+        # fit a LongType literal. Pairs within 0-1 bits need no banding:
+        # exact-join the signatures instead.
+        raise ValueError(
+            f"simhash_near_pairs: max_hamming must be >= 2, got {max_hamming}"
+        )
     n_bands = max_hamming // 2 + 1
     # Partition the 64 bits into n_bands contiguous bands whose widths sum
     # to EXACTLY 64 (the first 64 % n_bands bands get one extra bit). A

@@ -639,6 +639,7 @@ def st_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..session import configure
     from ..sources.python_datasource import SensorsStreamDataSource
+    from ..streaming import drain
 
     configure(spark)
     try:
@@ -651,7 +652,7 @@ def st_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(ckpt, ignore_errors=True)
 
     def drain_once() -> None:
-        q = (
+        drain(
             spark.readStream.format("demo_sensors_stream")
             .option("batches", "3")
             .option("rows_per_batch", "100")
@@ -659,11 +660,7 @@ def st_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             .writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
 
     seen = -1
     for _ in range(6):  # 3 data batches + the empty run that ends the loop

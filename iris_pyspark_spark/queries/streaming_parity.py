@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from ..streaming import drain_to_table, read_events_stream
+from ..streaming import drain, drain_to_table, read_events_stream
 from .joins import CENTS_SQL, cents
 
 _TUMBLING_ORACLE = f"""
@@ -51,12 +51,7 @@ def st_tumbling_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    return drain_to_table(
-        agg,
-        output_mode="complete",
-        shuffle_partitions=8,
-        no_data_microbatches=False,
-    )
+    return drain_to_table(agg, output_mode="complete")
 
 
 _SESSION_ORACLE = """
@@ -104,12 +99,7 @@ def st_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    return drain_to_table(
-        agg,
-        output_mode="complete",
-        shuffle_partitions=8,
-        no_data_microbatches=False,
-    )
+    return drain_to_table(agg, output_mode="complete")
 
 
 _DEDUP_ORACLE = """
@@ -132,9 +122,7 @@ def st_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = e.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    sink = drain_to_table(
-        deduped, output_mode="append", no_data_microbatches=False
-    )
+    sink = drain_to_table(deduped, output_mode="append", no_data_microbatches=False)
     return sink.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_unique"))
 
 
@@ -165,12 +153,7 @@ def st_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.sum(cents(F.col("value"))) / 100.0).alias("total_value"),
         )
     )
-    return drain_to_table(
-        agg,
-        output_mode="complete",
-        shuffle_partitions=8,
-        no_data_microbatches=False,
-    )
+    return drain_to_table(agg, output_mode="complete")
 
 
 _STREAM_STREAM_ORACLE = """
@@ -228,9 +211,7 @@ def st_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "purchase_id",
         (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("us_to_purchase"),
     )
-    return drain_to_table(
-        joined, output_mode="append", no_data_microbatches=False
-    )
+    return drain_to_table(joined, output_mode="append", no_data_microbatches=False)
 
 
 _FB_UPSERT_ORACLE = f"""
@@ -253,7 +234,6 @@ def st_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     maxFilesPerTrigger=1, so the artifact really is built across 4
     micro-batches; integer-cents totals make the final state identical
     to the one-shot batch aggregate regardless of how rows split."""
-    import os
     import shutil
 
     from ..session import configure
@@ -272,11 +252,10 @@ def st_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     artifact = scratch_dir(sf_dir, "fb_artifact")
     stage = scratch_dir(sf_dir, "fb_artifact_stage")
-    # Fresh artifact AND checkpoint per run: a checkpoint surviving a
-    # crashed run would resume mid-stream against the emptied artifact
-    # and undercount. Clearing both makes every run a full, exact replay.
+    # Fresh artifact per run, and the drain's checkpoint is a new
+    # temporary one per query, so every run is a full, exact replay
+    # (a surviving checkpoint would resume mid-stream and undercount).
     shutil.rmtree(artifact, ignore_errors=True)
-    shutil.rmtree(scratch_dir(sf_dir, "fb_ckpt_tmp"), ignore_errors=True)
 
     stream = (
         spark.readStream.schema(
@@ -312,14 +291,7 @@ def st_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             "partitionOverwriteMode", "dynamic"
         ).partitionBy("event_type").parquet(artifact)
 
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", scratch_dir(sf_dir, "fb_ckpt_tmp"))
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(scratch_dir(sf_dir, "fb_ckpt_tmp"), ignore_errors=True)
+    drain(stream.writeStream.foreachBatch(upsert))
     return spark.read.parquet(artifact).select("event_type", "n_events", "total_cents")
 
 
@@ -368,27 +340,23 @@ def st_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type string, value double, props string"
     )
 
-    def drain() -> None:
-        q = (
+    def drain_src() -> None:
+        drain(
             spark.readStream.schema(schema)
             .parquet(src)
             .writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination()
 
     # Run 1: first half of the files.
     for f in parts[:2]:
         shutil.copy2(os.path.join(staged, f), os.path.join(src, f))
-    drain()
+    drain_src()
     # The rest of the landing zone arrives; the SAME checkpoint resumes.
     for f in parts[2:]:
         shutil.copy2(os.path.join(staged, f), os.path.join(src, f))
-    drain()
+    drain_src()
 
     return (
         spark.read.schema(schema)
@@ -426,12 +394,7 @@ def st_complete_mode_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum(cents(F.col("value"))).alias("total_cents"),
     )
-    sink = drain_to_table(
-        agg,
-        output_mode="complete",
-        shuffle_partitions=8,
-        no_data_microbatches=False,
-    )
+    sink = drain_to_table(agg, output_mode="complete")
     # Complete mode re-emits the full table per batch: keep the final
     # state = max per key (counts are monotone across batches).
     return sink.groupBy("event_type").agg(
@@ -484,12 +447,7 @@ def st_sliding_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    return drain_to_table(
-        agg,
-        output_mode="complete",
-        shuffle_partitions=8,
-        no_data_microbatches=False,
-    )
+    return drain_to_table(agg, output_mode="complete")
 
 
 _TWS_ORACLE = f"""
@@ -669,12 +627,7 @@ def st_pipeline_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partitioning, and every batch emits the full result — so 8 state
     # stores per operator (not 32) and no trailing no-data batch. Cuts
     # the fixed micro-batch overhead ~40% (2.98s -> 1.5-1.9s at sf0.1).
-    return drain_to_table(
-        agg,
-        output_mode="complete",
-        shuffle_partitions=8,
-        no_data_microbatches=False,
-    )
+    return drain_to_table(agg, output_mode="complete")
 
 
 _ST_PIPELINE_APPEND_ORACLE = f"""
@@ -743,11 +696,8 @@ def st_pipeline_ingest_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # Append mode emits each closed window exactly once, so the sink IS
-    # the answer — no max-per-key rollup needed. 8 state stores per
-    # operator is still plenty for the drain's state volume; on a real
-    # unbounded deployment leave shuffle_partitions at the cluster
-    # default so state spreads across executors.
-    return drain_to_table(agg, output_mode="append", shuffle_partitions=8)
+    # the answer — no max-per-key rollup needed.
+    return drain_to_table(agg, output_mode="append")
 
 
 _STREAM_STREAM_OUTER_ORACLE = """
@@ -883,15 +833,8 @@ def st_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    name = "progress_metrics_sink"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    # The noop sink: only the query's progress is read, so no sink view.
+    q = drain(agg.writeStream.format("noop"), "complete")
     progresses = [p for p in q.recentProgress if p is not None]
     total_input = sum(int(p["numInputRows"]) for p in progresses)
     n_batches = len(progresses)
@@ -969,12 +912,7 @@ def st_replay_determinism(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cents",
             )
         )
-        return drain_to_table(
-        agg,
-        output_mode="complete",
-        shuffle_partitions=8,
-        no_data_microbatches=False,
-    )
+        return drain_to_table(agg, output_mode="complete")
 
     run1 = one_drain().select(
         F.col("w_start"), F.col("n").alias("n1"), F.col("cents").alias("c1")
@@ -1068,12 +1006,7 @@ def st_union_two_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_cents",
         )
     )
-    return drain_to_table(
-        agged,
-        output_mode="complete",
-        shuffle_partitions=8,
-        no_data_microbatches=False,
-    ).orderBy("w_start")
+    return drain_to_table(agged, output_mode="complete").orderBy("w_start")
 
 
 # ---------------------------------------------------------------------------
@@ -1216,8 +1149,6 @@ def st_foreachbatch_merge_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dim = scratch_dir(sf_dir, "scd2_dim_obs")
     shutil.rmtree(dim, ignore_errors=True)
-    ckpt = scratch_dir(sf_dir, "scd2_ckpt_tmp")
-    shutil.rmtree(ckpt, ignore_errors=True)
 
     stream = (
         spark.readStream.schema(
@@ -1232,14 +1163,7 @@ def st_foreachbatch_merge_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         _scd2_merge_batch(spark, dim, batch_df)
 
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
+    drain(stream.writeStream.foreachBatch(merge))
 
     obs = spark.read.option("basePath", dim).parquet(dim)
     wv = Window.partitionBy("user_id").orderBy("wnd")
@@ -1382,12 +1306,7 @@ def st_dedup_then_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions = deduped.groupBy(
         F.session_window("ts", "30 minutes"), "user_id"
     ).agg(F.count(F.lit(1)).cast("long").alias("n_instants"))
-    sunk = drain_to_table(
-        sessions,
-        output_mode="complete",
-        shuffle_partitions=8,
-        no_data_microbatches=False,
-    )
+    sunk = drain_to_table(sessions, output_mode="complete")
     return (
         sunk.groupBy("user_id")
         .agg(
@@ -1451,12 +1370,7 @@ def st_static_enrich_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value_cents",
         )
     )
-    return drain_to_table(
-        agg,
-        output_mode="complete",
-        shuffle_partitions=8,
-        no_data_microbatches=False,
-    )
+    return drain_to_table(agg, output_mode="complete")
 
 
 # --- T6+T1, fifth wave: static dimension joined AFTER the stateful agg -------
@@ -1511,12 +1425,7 @@ def st_postagg_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         "value_cents",
     )
-    return drain_to_table(
-        enriched,
-        output_mode="complete",
-        shuffle_partitions=8,
-        no_data_microbatches=False,
-    )
+    return drain_to_table(enriched, output_mode="complete")
 
 
 # --- T7+T4+U2, seventh wave: arbitrary stateful dedup census ------------------
@@ -1661,7 +1570,7 @@ def st_apply_state_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "update",
         GroupStateTimeout.NoTimeout,
     )
-    sink = drain_to_table(updates, output_mode="update", shuffle_partitions=8)
+    sink = drain_to_table(updates, output_mode="update")
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id", "event_type").orderBy(F.desc("n_seen"))
@@ -1743,7 +1652,7 @@ def st_sliding_append_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_cents",
         )
     )
-    return drain_to_table(agg, output_mode="append", shuffle_partitions=8)
+    return drain_to_table(agg, output_mode="append")
 
 
 # --- T3+T5+T4, seventh wave: session window in APPEND mode -------------------
@@ -1823,7 +1732,7 @@ def st_session_append_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    return drain_to_table(agg, output_mode="append", shuffle_partitions=8)
+    return drain_to_table(agg, output_mode="append")
 
 
 # --- T6+J4, seventh wave: stream-static LEFT SEMI join ------------------------
@@ -1882,12 +1791,7 @@ def st_semi_join_static_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_cents",
         )
     )
-    return drain_to_table(
-        agg,
-        output_mode="complete",
-        shuffle_partitions=8,
-        no_data_microbatches=False,
-    )
+    return drain_to_table(agg, output_mode="complete")
 
 
 # --- T7+T2, seventh wave: dedup feeding a sliding window ----------------------
@@ -1954,12 +1858,7 @@ def st_dedup_sliding_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_user_minutes",
         )
     )
-    return drain_to_table(
-        agg,
-        output_mode="complete",
-        shuffle_partitions=8,
-        no_data_microbatches=False,
-    )
+    return drain_to_table(agg, output_mode="complete")
 
 
 # === Eighth wave (round 10): streaming depth restocks ==========================
@@ -2047,12 +1946,7 @@ def st_session_static_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value_cents",
         )
     )
-    return drain_to_table(
-        agg,
-        output_mode="complete",
-        shuffle_partitions=8,
-        no_data_microbatches=False,
-    )
+    return drain_to_table(agg, output_mode="complete")
 
 
 # --- T2+T6+J6+J4, eighth wave: sliding window behind a static-star semi gate ---
@@ -2125,12 +2019,7 @@ def st_sliding_star_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_cents",
         )
     )
-    return drain_to_table(
-        agg,
-        output_mode="complete",
-        shuffle_partitions=8,
-        no_data_microbatches=False,
-    )
+    return drain_to_table(agg, output_mode="complete")
 
 
 # --- T3+T7, eighth wave: dedup feeding a session window ------------------------
@@ -2207,12 +2096,7 @@ def st_session_dedup_quiet(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_active_minutes",
         )
     )
-    return drain_to_table(
-        agg,
-        output_mode="complete",
-        shuffle_partitions=8,
-        no_data_microbatches=False,
-    )
+    return drain_to_table(agg, output_mode="complete")
 
 
 # --- U2+T4+T7, eighth wave: arbitrary-state user-day duplicate census ----------
@@ -2364,7 +2248,7 @@ def st_apply_state_day_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         "update",
         GroupStateTimeout.NoTimeout,
     )
-    sink = drain_to_table(updates, output_mode="update", shuffle_partitions=8)
+    sink = drain_to_table(updates, output_mode="update")
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id", "epoch_day").orderBy(F.desc("n"))
@@ -2460,7 +2344,7 @@ def st_tumbling_late_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             "max_event_id",
         )
     )
-    return drain_to_table(agg, output_mode="append", shuffle_partitions=8)
+    return drain_to_table(agg, output_mode="append")
 
 
 # --- T2+T6+J4, ninth wave: balance-gated sliding value bands -------------------
@@ -2528,12 +2412,7 @@ def st_sliding_static_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_cents",
         )
     )
-    return drain_to_table(
-        agg,
-        output_mode="complete",
-        shuffle_partitions=8,
-        no_data_microbatches=False,
-    )
+    return drain_to_table(agg, output_mode="complete")
 
 
 # --- T3+T6+J5, ninth wave: anti-gated session windows ---------------------------
@@ -2614,12 +2493,7 @@ def st_session_static_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value_cents",
         )
     )
-    return drain_to_table(
-        agg,
-        output_mode="complete",
-        shuffle_partitions=8,
-        no_data_microbatches=False,
-    )
+    return drain_to_table(agg, output_mode="complete")
 
 
 # --- T1+T2+T5, ninth wave: tumbling and sliding arms of one monitor ------------
@@ -2683,12 +2557,9 @@ def st_tumbling_sliding_union(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_cents",
         )
     )
-    tum_drained = drain_to_table(
-        tum,
-        output_mode="complete",
-        shuffle_partitions=8,
-        no_data_microbatches=False,
-    ).withColumn("arm", F.lit("tumbling"))
+    tum_drained = drain_to_table(tum, output_mode="complete").withColumn(
+        "arm", F.lit("tumbling")
+    )
     sli_src = read_events_stream(spark, sf_dir)
     sli = (
         sli_src.withWatermark("ts", "10 minutes")
@@ -2705,12 +2576,9 @@ def st_tumbling_sliding_union(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_cents",
         )
     )
-    sli_drained = drain_to_table(
-        sli,
-        output_mode="complete",
-        shuffle_partitions=8,
-        no_data_microbatches=False,
-    ).withColumn("arm", F.lit("sliding"))
+    sli_drained = drain_to_table(sli, output_mode="complete").withColumn(
+        "arm", F.lit("sliding")
+    )
     return tum_drained.unionByName(sli_drained).select(
         "arm", "window_start_epoch", "n_events", "total_cents"
     )
@@ -2796,12 +2664,7 @@ def st_type_session_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_buckets",
         )
     )
-    return drain_to_table(
-        agg,
-        output_mode="complete",
-        shuffle_partitions=8,
-        no_data_microbatches=False,
-    )
+    return drain_to_table(agg, output_mode="complete")
 
 
 # --- U2+T4+T7, ninth wave: arbitrary-state (user, type) census ------------------
@@ -2964,7 +2827,7 @@ def st_state_type_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     updates = stream.groupBy("user_id", "event_type").applyInPandasWithState(
         census, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-    sink = drain_to_table(updates, output_mode="update", shuffle_partitions=8)
+    sink = drain_to_table(updates, output_mode="update")
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id", "event_type").orderBy(F.desc("n"))
@@ -3092,7 +2955,7 @@ def st_state_value_extremes(spark: SparkSession, sf_dir: str) -> DataFrame:
     updates = stream.groupBy("user_id").applyInPandasWithState(
         extremes, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-    sink = drain_to_table(updates, output_mode="update", shuffle_partitions=8)
+    sink = drain_to_table(updates, output_mode="update")
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy(F.desc("n"))

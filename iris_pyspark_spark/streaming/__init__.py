@@ -3,10 +3,11 @@
 Every batch event-time query in queries/events_windows.py has a true
 streaming twin here: `spark.readStream` over the events parquet →
 stateful incremental execution (micro-batches, state store, watermark
-tracking) → memory sink. `Trigger.AvailableNow` drains all available
-input then stops, so the streaming result is a finite DataFrame the
-DuckDB oracle can check — the execution path is IncrementalExecution,
-not the batch planner, which is the point.
+tracking) → memory sink. `drain` runs every streaming query in the
+engine: `Trigger.AvailableNow` drains all available input then stops,
+so the streaming result is a finite DataFrame the DuckDB oracle can
+check — the execution path is IncrementalExecution, not the batch
+planner, which is the point.
 
 Output modes: aggregations run in `complete` mode (append would hold
 back the final windows forever, since the watermark never advances past
@@ -32,6 +33,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..session import configure
 from ..sources import materialize
@@ -98,52 +100,78 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.readStream.schema(_events_raw_schema(T.TimestampType())).parquet(src)
 
 
-def drain_to_table(
-    stream_df: DataFrame,
-    output_mode: str,
+#: Shuffle (= state-store) partitions for every drain, whatever the
+#: session's `spark.sql.shuffle.partitions`. A drain is bounded: it
+#: replays one finite source and stops, so its state volume is the
+#: size of the final answer (a few thousand rows here), and every
+#: stateful operator loads and commits one state store per partition
+#: per micro-batch. The count only spreads keys over state stores, so
+#: it cannot change a drained answer (each st_* query's oracle checks
+#: the answer); it only prices the drain. An unbounded deployment sizes
+#: state from its own state volume instead.
+DRAIN_STATE_PARTITIONS = 8
+
+
+def drain(
+    writer: DataStreamWriter,
+    output_mode: str = "append",
     *,
-    shuffle_partitions: int | None = None,
     no_data_microbatches: bool = True,
-) -> DataFrame:
-    """Run a streaming DataFrame to completion (AvailableNow) into a
-    memory sink; return the sink contents as a batch DataFrame.
+) -> StreamingQuery:
+    """Run `writer`'s query to completion with AvailableNow and return
+    the terminated query (its `recentProgress` is the drain's
+    telemetry). The one place the engine starts a streaming query.
 
-    Tuning knobs for COMPLETE-mode drains (both conf values are set for
-    the duration of this drain only, then restored):
+    For this drain only, two confs are set and then restored:
 
-    * `shuffle_partitions` — every stateful operator loads + commits one
-      state store per shuffle partition per micro-batch; a drain whose
-      final answer is a few thousand rows doesn't need 32 of them per
-      operator. Complete mode re-emits the whole result each batch, so
-      partition count cannot change the answer. Leave None for append /
-      update queries at production scale, where state volume is the
-      sizing driver.
-    * `no_data_microbatches=False` skips the trailing empty batch Spark
-      schedules to let watermark-driven state FLUSH (append-mode window
-      emission, outer-join flush, session timeouts). Complete mode
-      emits the full result on every data batch, so the extra batch is
-      pure fixed overhead there — but leave it True for any query whose
-      final rows are emitted by watermark expiry."""
-    name = f"stream_sink_{next(_SINK_IDS)}"
-    spark = stream_df.sparkSession
-    overrides: dict[str, str] = {}
-    if shuffle_partitions is not None:
-        overrides["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    if not no_data_microbatches:
+    * `spark.sql.shuffle.partitions` = DRAIN_STATE_PARTITIONS. The
+      streaming path gets no AQE coalescing, so this is the state-store
+      count of every stateful operator. A persistent checkpoint keeps
+      the count its first run recorded.
+    * the trailing no-data micro-batch is skipped in complete mode, and
+      whenever the caller passes `no_data_microbatches=False`. Spark
+      schedules that batch so watermark expiry can flush state (append
+      windows, outer-join rows, session timeouts). Complete mode emits
+      the whole result on every data batch, so there the batch could
+      only evict state (of a dedup or join upstream of the aggregate),
+      never change the answer. Append queries that emit on arrival
+      (dedup, inner stream-stream join) may skip it too; a query whose
+      final rows come from watermark expiry must not."""
+    spark = writer._spark  # DataStreamWriter has no public session accessor
+    overrides = {"spark.sql.shuffle.partitions": str(DRAIN_STATE_PARTITIONS)}
+    if output_mode == "complete" or not no_data_microbatches:
         overrides["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
     restore = {k: spark.conf.get(k) for k in overrides}
     for k, v in overrides.items():
         spark.conf.set(k, v)
     try:
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
+        q = writer.outputMode(output_mode).trigger(availableNow=True).start()
         q.awaitTermination()
     finally:
         for k, v in restore.items():
             spark.conf.set(k, v)
-    return spark.table(name)
+    return q
+
+
+def drain_to_table(
+    stream_df: DataFrame,
+    output_mode: str,
+    *,
+    no_data_microbatches: bool = True,
+) -> DataFrame:
+    """`drain` `stream_df` into a memory sink and return the sink's
+    contents as a batch DataFrame. The sink's temp view is dropped
+    before returning, so drains leave no views behind: analysis is
+    eager, and the returned frame holds the sink itself, not its name.
+    The query's temporary checkpoint is deleted by Spark when the drain
+    succeeds."""
+    name = f"stream_sink_{next(_SINK_IDS)}"
+    spark = stream_df.sparkSession
+    drain(
+        stream_df.writeStream.format("memory").queryName(name),
+        output_mode,
+        no_data_microbatches=no_data_microbatches,
+    )
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out

@@ -1,0 +1,102 @@
+"""The one streaming drain (`streaming.drain` / `drain_to_table`): its
+conf policy, and what it leaves behind in the session and on disk."""
+
+from __future__ import annotations
+
+import os
+from urllib.parse import urlparse
+
+from pyspark.sql import functions as F
+
+from iris_pyspark_spark.streaming import DRAIN_STATE_PARTITIONS, drain, drain_to_table
+
+
+def _stream(spark, tmp_path):
+    """A one-file, 100-row parquet source: `k` = id % 3 (34/33/33 rows)."""
+    src = str(tmp_path / "src")
+    spark.range(100).coalesce(1).withColumn("k", F.col("id") % 3).write.parquet(src)
+    return spark.readStream.schema("id long, k long").parquet(src)
+
+
+def _temp_views(spark) -> int:
+    return sum(t.isTemporary for t in spark.catalog.listTables())
+
+
+def test_drain_policy_is_scoped_to_the_drain(spark, tmp_path):
+    """Every drain runs its state stores at DRAIN_STATE_PARTITIONS and a
+    complete-mode drain skips the trailing no-data batch (one data
+    batch, not two, although the watermarked dedup would ask for an
+    eviction batch); the session's own confs are back afterwards."""
+    stream = _stream(spark, tmp_path).withColumn(
+        "ts", F.timestamp_seconds(F.col("id"))
+    )
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+    )
+    saved = spark.conf.get(keys[0])
+    spark.conf.set(keys[0], "3")  # a session value the drain must not use
+    try:
+        before = {k: spark.conf.get(k) for k in keys}
+        agg = (
+            stream.withWatermark("ts", "1 second")
+            .dropDuplicatesWithinWatermark(["id"])
+            .groupBy("k")
+            .count()
+        )
+        q = drain(agg.writeStream.format("noop"), "complete")
+        after = {k: spark.conf.get(k) for k in keys}
+    finally:
+        spark.conf.set(keys[0], saved)
+    progress = [p for p in q.recentProgress if p is not None]
+    assert len(progress) == 1
+    assert progress[0]["numInputRows"] == 100
+    state = progress[0]["stateOperators"][0]
+    assert state["numShufflePartitions"] == DRAIN_STATE_PARTITIONS
+    assert after == before
+
+
+def test_drains_leave_no_sink_views(spark, tmp_path):
+    """drain_to_table drops its sink view before returning: N drains
+    leave the session's temp-view count unchanged, and the drained
+    frames stay readable and joinable (st_replay_determinism joins
+    two)."""
+    stream = _stream(spark, tmp_path)
+    before = _temp_views(spark)
+    drained = [
+        drain_to_table(stream.groupBy("k").count(), "complete") for _ in range(3)
+    ]
+    assert _temp_views(spark) == before
+    joined = drained[0].join(drained[1].withColumnRenamed("count", "count2"), "k")
+    assert sorted(tuple(r) for r in joined.collect()) == [
+        (0, 34, 34),
+        (1, 33, 33),
+        (2, 33, 33),
+    ]
+    assert drained[2].count() == 3
+
+
+def test_successful_drains_delete_their_temporary_checkpoints(spark, tmp_path):
+    """A drain without a checkpointLocation gets a fresh temporary
+    checkpoint, which Spark deletes when the query succeeds — for the
+    memory sink and for foreachBatch alike, so drains need no cleanup
+    code of their own."""
+    stream = _stream(spark, tmp_path)
+
+    def root_dir(q) -> str:
+        return urlparse(q._jsq.streamingQuery().resolvedCheckpointRoot()).path
+
+    live = {}
+
+    def probe(batch_df, batch_id):
+        for active in spark.streams.active:
+            live[root_dir(active)] = os.path.isdir(root_dir(active))
+
+    fb = drain(stream.writeStream.foreachBatch(probe))
+    assert live.get(root_dir(fb)) is True  # it existed during the batch
+    counts = stream.groupBy("k").count()
+    mem = drain(counts.writeStream.format("memory").queryName("ckpt_probe"), "complete")
+    spark.catalog.dropTempView("ckpt_probe")
+    for q in (fb, mem):
+        assert os.path.basename(root_dir(q)).startswith("temporary-")
+        assert not os.path.exists(root_dir(q))

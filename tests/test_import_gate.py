@@ -103,27 +103,44 @@ def test_registered_query_body_imports_resolve():
     assert not problems, "\n".join(problems)
 
 
-def test_scratch_artifacts_go_through_materialize():
-    """Every scratch-artifact build goes through sources.materialize,
-    which owns the check → build → record → mark sequence: no module
-    outside sources/ may call the pieces itself (a hand-rolled build
-    would skip ARTIFACT_BUILD_SECONDS or the completeness rules)."""
+#: (banned pattern, the one top-level subpackage allowed to use it, or
+#: None for nowhere). Each primitive owns a job so that no module
+#: hand-rolls it:
+#:   * sources.materialize owns the scratch-artifact check → build →
+#:     record → mark sequence (a hand-rolled build would skip
+#:     ARTIFACT_BUILD_SECONDS or the completeness rules);
+#:   * streaming.drain owns starting and awaiting every streaming query,
+#:     with its state-partition policy and restored confs;
+#:   * drains size state from DRAIN_STATE_PARTITIONS, so no engine code
+#:     passes a partition count of its own.
+_OWNED_SEAMS = (
+    (r"\b(artifact_is_current|mark_artifact|record_build_seconds)\b", "sources"),
+    (r"availableNow|awaitTermination", "streaming"),
+    (r"\bshuffle_partitions=", None),
+)
+
+
+def test_engine_seams_go_through_their_primitive():
+    """No engine module outside a seam's owner matches its banned
+    pattern (see _OWNED_SEAMS)."""
     import re
 
     pkg = os.path.dirname(inspect.getfile(load_all))
-    banned = re.compile(r"\b(artifact_is_current|mark_artifact|record_build_seconds)\b")
+    seams = [(re.compile(pat), owner) for pat, owner in _OWNED_SEAMS]
     hits = []
     for dirpath, _dirnames, filenames in os.walk(pkg):
-        if os.path.relpath(dirpath, pkg).split(os.sep)[0] == "sources":
-            continue
+        subpkg = os.path.relpath(dirpath, pkg).split(os.sep)[0]
         for fname in filenames:
             if not fname.endswith(".py"):
                 continue
             path = os.path.join(dirpath, fname)
             with open(path) as f:
                 for lineno, line in enumerate(f, 1):
-                    if banned.search(line):
-                        hits.append(f"{os.path.relpath(path, pkg)}:{lineno}: {line.strip()}")
+                    for banned, owner in seams:
+                        if subpkg != owner and banned.search(line):
+                            hits.append(
+                                f"{os.path.relpath(path, pkg)}:{lineno}: {line.strip()}"
+                            )
     assert not hits, "\n".join(hits)
 
 

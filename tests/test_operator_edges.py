@@ -253,6 +253,19 @@ def test_simhash_two_level_no_clean_band(spark):
     assert simhash_near_pairs(df9, "doc_id", "simhash", max_hamming=8).collect() == []
 
 
+def test_simhash_rejects_single_band_limits(spark):
+    """max_hamming < 2 means one 64-bit band, whose mask overflows a
+    LongType literal; the operator must say so at the call."""
+    import pytest
+
+    from iris_pyspark_spark.operators.dedup import simhash_near_pairs
+
+    df = spark.createDataFrame([(1, 0x12345)], "doc_id long, simhash long")
+    for max_hamming in (0, 1):
+        with pytest.raises(ValueError, match="max_hamming must be >= 2"):
+            simhash_near_pairs(df, "doc_id", "simhash", max_hamming=max_hamming)
+
+
 def test_connected_components_chain_and_islands(spark, tmp_path):
     """Transitive closure must cross chains (1-2, 2-3 → one component)
     and keep disjoint components apart; the fixed point is min-id."""
@@ -644,7 +657,7 @@ def test_apply_state_dedup_invariant_to_batch_split(spark, sf_dir):
     updates = keyed.groupBy("user_id", "event_type").applyInPandasWithState(
         track, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-    sink = drain_to_table(updates, output_mode="update", shuffle_partitions=8)
+    sink = drain_to_table(updates, output_mode="update")
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id", "event_type").orderBy(F.desc("n_seen"))
@@ -774,7 +787,7 @@ def test_apply_state_day_census_invariant_to_batch_split(spark, sf_dir):
     updates = keyed.groupBy("user_id", "epoch_day").applyInPandasWithState(
         census, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-    sink = drain_to_table(updates, output_mode="update", shuffle_partitions=8)
+    sink = drain_to_table(updates, output_mode="update")
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id", "epoch_day").orderBy(F.desc("n"))
