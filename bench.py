@@ -103,13 +103,12 @@ def main() -> None:
     # Warm codegen/JIT once per headline plan at the smallest SF:
     # generated classes depend on plan shape, not data volume, so this
     # compiles every stage for pennies and the sf-under-test runs
-    # measure steady-state execution, not JIT compilation.
-    warm_dir = "/root/testdata/sf0.001"
+    # measure steady-state execution, not JIT compilation. The warm-up
+    # tables sit beside the ones under test; a failing warm-up query
+    # fails the bench rather than silently leaving its JIT cold.
+    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
     for name, q in sorted(headline.items()):
-        try:
-            q.fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
-        except Exception:
-            pass  # warmup is best-effort
+        q.fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
 
     # Drop warm-up (sf0.001) artifact builds from the build-seconds
     # report: the additive key below should hold only the builds paid at

@@ -5,7 +5,7 @@ columnar + filter-pushdown-capable. The one normalization done here is
 `events.ts`, which has shipped in two vintages across driver data
 generations: parquet TIMESTAMP(NANOS) — which Spark 4 cannot read
 natively, so it arrives as ns-int64 under `spark.sql.legacy.parquet.
-nanosAsLong=true` (set in session.configure) and is truncated to µs
+nanosAsLong=true` (a session.RUNTIME_CONFS entry) and is truncated to µs
 TIMESTAMP_NTZ, matching DuckDB's ns→µs truncation — and plain
 TIMESTAMP(MICROS) NTZ (the current generation), which Spark reads
 natively and load_table passes through untouched. The scan's actual
@@ -22,7 +22,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .session import configure
 
 #: All engine tables, in dimension→fact order.
 TABLES: tuple[str, ...] = (
@@ -40,7 +39,6 @@ TABLES: tuple[str, ...] = (
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table from `{sf_dir}/{name}.parquet`, normalized."""
-    configure(spark)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
         # The generated events table has carried two ts encodings across

@@ -808,13 +808,12 @@ def g_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph is heavy-tailed (scale-free-ish) or homogeneous, which
     decides whether skew handling (salting, AQE skew join) matters for
     graph workloads on this data. Buckets by exact LENGTH(bin(d))
-    (the `a_log2_histogram` rule — no float log), edges from the
-    bounded orderkey self-join, degrees one combinable count.
+    (the `a_log2_histogram` rule — no float log). Degrees come from
+    the shared fingerprinted degree artifact (`_pair_degrees`): this
+    query needs ONLY degrees, so it scans |V| parquet rows instead of
+    rebuilding the basket expansion + distinct + degree aggregation
+    the triangle/rich-club/curve queries also need.
     """
-    # Degree table from the shared fingerprinted artifact (round 12):
-    # this query needs ONLY degrees, so it scans |V| parquet rows
-    # instead of rebuilding the basket expansion + distinct + degree
-    # aggregation the triangle/rich-club/curve queries also need.
     deg = _pair_degrees(spark, sf_dir)
     return (
         deg.groupBy(F.length(F.bin("d")).alias("bucket"))

@@ -25,6 +25,7 @@ from pyspark.sql import types as T
 from ..catalog import load_table
 from ..operators.skew import salted_agg, salted_join
 from ..registry import register
+from ..session import scoped_confs
 from ..sources import materialize, scratch_dir
 from .joins import CENTS_SQL, cents
 
@@ -482,16 +483,10 @@ def st_stateful_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     streams keep their configured backend."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from ..streaming import drain_to_table, read_events_stream
+    from ..streaming import ROCKSDB_STATE_STORE, drain_to_table, read_events_stream
 
     e = read_events_stream(spark, sf_dir).select("event_type", "value")
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_confs(spark, ROCKSDB_STATE_STORE):
         updates = e.groupBy("event_type").applyInPandasWithState(
             _sum_cents_state,
             outputStructType=_ROCKS_OUT_SCHEMA,
@@ -500,11 +495,6 @@ def st_stateful_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
         sink = drain_to_table(updates, output_mode="update")
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
     # Totals are monotone: each key's final state is its max.
     return sink.groupBy("event_type").agg(
         F.max("n_events").alias("n_events"),
@@ -920,17 +910,11 @@ def j_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "64KB",
     }
-    saved = {k: spark.conf.get(k) for k in confs}
     out_path = scratch_dir(sf_dir, "bloom_filter_join") + "/out"
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with scoped_confs(spark, confs):
         bloom_runtime_filter_plan(spark, sf_dir).write.mode("overwrite").parquet(
             out_path
         )
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
     return spark.read.parquet(out_path)
 
 

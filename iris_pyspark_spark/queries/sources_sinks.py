@@ -637,11 +637,9 @@ def st_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     checks."""
     import shutil
 
-    from ..session import configure
     from ..sources.python_datasource import SensorsStreamDataSource
     from ..streaming import drain
 
-    configure(spark)
     try:
         spark.dataSource.register(SensorsStreamDataSource)
     except Exception:

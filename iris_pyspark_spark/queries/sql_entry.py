@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog import load_tables
 from ..registry import register
+from ..session import scoped_confs
 
 #: TPC-H Q3 shape. Revenue in integer cents: the join reorders rows, so
 #: a raw double SUM would differ between engines by summation order.
@@ -827,9 +828,11 @@ ORDER BY o_orderpriority
 @register("sql_scripting_threshold_search", oracle=_SCRIPTING_ORACLE, tags=("E2", "P2", "A1"))
 def sql_scripting_threshold_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    return spark.sql(
-        """
+    # A script runs eagerly inside spark.sql and returns its last
+    # result as a LocalRelation, so the conf is needed only for the call.
+    with scoped_confs(spark, {"spark.sql.scripting.enabled": "true"}):
+        return spark.sql(
+            """
         BEGIN
           DECLARE thr DOUBLE DEFAULT 104857600.0;  -- 100 * 2^20
           WHILE (SELECT COUNT(*) FROM orders WHERE o_totalprice > thr) < 1000 DO
@@ -844,7 +847,7 @@ def sql_scripting_threshold_search(spark: SparkSession, sf_dir: str) -> DataFram
           ORDER BY o_orderpriority;
         END
         """
-    )
+        )
 
 
 #: EXECUTE IMMEDIATE (Spark 4.0): SQL text built/stored as DATA and

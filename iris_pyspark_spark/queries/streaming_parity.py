@@ -17,7 +17,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import register
-from ..streaming import drain, drain_to_table, read_events_stream
+from ..session import scoped_confs
+from ..streaming import ROCKSDB_STATE_STORE, drain, drain_to_table, read_events_stream
 from .joins import CENTS_SQL, cents
 
 _TUMBLING_ORACLE = f"""
@@ -236,10 +237,8 @@ def st_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the one-shot batch aggregate regardless of how rows split."""
     import shutil
 
-    from ..session import configure
     from ..sources import materialize, scratch_dir
 
-    configure(spark)
     src = materialize(
         sf_dir,
         "fb_src",
@@ -319,10 +318,8 @@ def st_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from ..session import configure
     from ..sources import scratch_dir
 
-    configure(spark)
     staged = scratch_dir(sf_dir, "resume_staged")  # all files, pre-split
     src = scratch_dir(sf_dir, "resume_src")        # the monitored dir
     sink = scratch_dir(sf_dir, "resume_sink")
@@ -499,8 +496,6 @@ def st_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
-    from ..streaming import drain_to_table, read_events_stream
-
     class RunningTotals(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
             self._totals = handle.getValueState(
@@ -535,13 +530,7 @@ def st_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             pass
 
     e = read_events_stream(spark, sf_dir).select("event_type", "value")
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
+    with scoped_confs(spark, ROCKSDB_STATE_STORE):
         updates = e.groupBy("event_type").transformWithStateInPandas(
             statefulProcessor=RunningTotals(),
             outputStructType="event_type string, n_events bigint, total_cents bigint",
@@ -549,11 +538,6 @@ def st_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeMode="None",
         )
         sink = drain_to_table(updates, output_mode="update")
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
     # One update row per (micro-batch, key): totals are monotone, so
     # each key's final state is its max.
     return sink.groupBy("event_type").agg(
@@ -1131,10 +1115,7 @@ def st_foreachbatch_merge_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.window import Window
 
-    from ..session import configure
     from ..sources import materialize, scratch_dir
-
-    configure(spark)
 
     def stage(path: str) -> None:
         e = load_table(spark, sf_dir, "events").withColumn(
@@ -1490,10 +1471,8 @@ def st_apply_state_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    from ..session import configure
     from ..sources import materialize
 
-    configure(spark)
     src = materialize(
         sf_dir,
         "aps_src",
@@ -2154,10 +2133,7 @@ def st_apply_state_day_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming.state import GroupStateTimeout
     from pyspark.sql.types import LongType, StructField, StructType
 
-    from ..session import configure
     from ..sources import materialize
-
-    configure(spark)
 
     def stage(path: str) -> None:
         (
@@ -2690,10 +2666,7 @@ def _stage_aps_census_src(spark: SparkSession, sf_dir: str) -> str:
     round-robin across the 4 files, so cross-batch state merging stays
     exercised in the family. Money enters the partials as exact integer
     cents BEFORE summing — identical totals to summing per event."""
-    from ..session import configure
     from ..sources import materialize
-
-    configure(spark)
 
     def stage(path: str) -> None:
         (

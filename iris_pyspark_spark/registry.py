@@ -18,11 +18,14 @@ Determinism rules every query follows (SURVEY.md §5.2):
 
 from __future__ import annotations
 
+import functools
 import importlib
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .session import configure
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -85,12 +88,20 @@ def register(
     tags: tuple[str, ...] = (),
     headline: bool = False,
 ) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: add fn to the registry under `name`."""
+    """Decorator: add fn to the registry under `name`. The registered fn
+    first applies the session policy (`session.configure`, once per
+    session), so the driver's vanilla sessions are configured too."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle, tags=tags, headline=headline)
+
+        @functools.wraps(fn)
+        def entry(spark: SparkSession, sf_dir: str) -> DataFrame:
+            configure(spark)
+            return fn(spark, sf_dir)
+
+        REGISTRY[name] = Query(name=name, fn=entry, oracle=oracle, tags=tags, headline=headline)
         return fn
 
     return deco

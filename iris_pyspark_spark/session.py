@@ -1,7 +1,9 @@
-"""SparkSession factory with scale-aware defaults.
+"""Session policy: the SparkSession factory and every conf the engine writes.
 
-One session per process; all knobs are safe on a real multi-executor
-cluster (they tune *plan* behavior, not local-mode hacks):
+`configure` applies RUNTIME_CONFS once per session; the registry calls it
+at query entry (every `Query.fn`), so a conf the caller sets afterwards
+holds. Engine code overrides a conf only inside `scoped_confs`, which
+restores it. The runtime confs, all safe on a multi-executor cluster:
 
   * AQE on (runtime re-planning, partition coalescing, skew-join split).
   * Arrow on (vectorized pandas interchange for the UDF slow-path).
@@ -16,16 +18,19 @@ cluster (they tune *plan* behavior, not local-mode hacks):
 from __future__ import annotations
 
 import os
+import weakref
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
 #: Runtime (SQL) confs — settable on an existing session too, which is how we
 #: harden sessions handed to us by external drivers (see `configure`).
 RUNTIME_CONFS: dict[str, str] = {
-    # Streaming stateful ops don't get AQE partition coalescing, so the
-    # static shuffle-partition count matters there (a vanilla session's
-    # 200 means 200 near-empty state-store tasks per micro-batch at test
-    # scale). Batch plans are unaffected in practice: AQE re-coalesces.
+    # The width a batch shuffle starts at before AQE coalesces it (a
+    # vanilla session's 200 writes 200 map-output blocks per mapper at
+    # MB scale). Streaming drains size their state stores from
+    # streaming.DRAIN_STATE_PARTITIONS, not from this.
     "spark.sql.shuffle.partitions": os.environ.get(
         "IRIS_PYSPARK_SHUFFLE_PARTITIONS", "32"
     ),
@@ -46,22 +51,32 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
-def configure(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to an existing session (idempotent).
+#: Sessions `configure` has already run on. Weak, so a stopped session
+#: is not kept alive; keyed by object, not `id()`, since ids are reused.
+_CONFIGURED: weakref.WeakSet[SparkSession] = weakref.WeakSet()
 
-    Used both by our own factory and on driver-provided sessions, since
-    reading `events.parquet` is impossible without `nanosAsLong`.
+
+def configure(spark: SparkSession) -> SparkSession:
+    """Apply runtime confs to a session, once per session.
+
+    Used both by our own factory and, through the registry, on
+    driver-provided sessions, since reading `events.parquet` is
+    impossible without `nanosAsLong`. Later calls on the same session do
+    nothing, so a conf the caller changes after the first query holds.
 
     Failures to apply a conf are collected and reported in ONE warning
     (not raised): a session that rejects `nanosAsLong` will fail on
     `events` reads far from the cause, and the warning is the breadcrumb.
     """
+    if spark in _CONFIGURED:
+        return spark
     failed: list[str] = []
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
         except Exception:
             failed.append(k)
+    _CONFIGURED.add(spark)  # after the sets: a concurrent caller re-applies, never skips
     if failed:
         import warnings
 
@@ -77,26 +92,34 @@ def configure(spark: SparkSession) -> SparkSession:
     return spark
 
 
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set `confs` for the block, then put each back: its prior value,
+    or unset if it had none. The one way engine code overrides a conf,
+    so no override outlives the query that needed it."""
+    prior = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def get_spark(
     app_name: str = "iris_pyspark_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    """Create (or fetch) the process-wide SparkSession.
-
-    An explicit `shuffle_partitions` wins over the env-var default —
-    both at build time and past the `configure()` re-application below
-    (which would otherwise clobber it with the RUNTIME_CONFS value)."""
+    """Create (or fetch) the process-wide SparkSession, configured."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
-    explicit_shuffle = shuffle_partitions
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("IRIS_PYSPARK_SHUFFLE_PARTITIONS", "32")
-    )
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("IRIS_PYSPARK_DRIVER_MEM", "8g"))
         # Whole-stage codegen emits one class per query stage; the JVM
@@ -108,13 +131,9 @@ def get_spark(
             "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",
         )
     )
-    for k, v in RUNTIME_CONFS.items():
-        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     configure(spark)
-    if explicit_shuffle is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(explicit_shuffle))
     _gc_scratch_once()
     return spark
 

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from ..session import configure
+from ..session import scoped_confs
 from ..sources import materialize
 
 def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
@@ -66,7 +66,6 @@ _SINK_IDS = itertools.count()
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet, normalized to the same
     (event_id, ts timestamp_ntz, ...) shape the batch catalog serves."""
-    configure(spark)
     # The file stream source monitors a DIRECTORY; the test data is a
     # single parquet file, so stage it into a scratch dir once. (A real
     # deployment's landing zone is already a directory of files.)
@@ -111,6 +110,12 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: state from its own state volume instead.
 DRAIN_STATE_PARTITIONS = 8
 
+#: The state store a large deployment runs, for `session.scoped_confs`.
+ROCKSDB_STATE_STORE = {
+    "spark.sql.streaming.stateStore.providerClass":
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+}
+
 
 def drain(
     writer: DataStreamWriter,
@@ -141,15 +146,9 @@ def drain(
     overrides = {"spark.sql.shuffle.partitions": str(DRAIN_STATE_PARTITIONS)}
     if output_mode == "complete" or not no_data_microbatches:
         overrides["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
-    restore = {k: spark.conf.get(k) for k in overrides}
-    for k, v in overrides.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(spark, overrides):
         q = writer.outputMode(output_mode).trigger(availableNow=True).start()
         q.awaitTermination()
-    finally:
-        for k, v in restore.items():
-            spark.conf.set(k, v)
     return q
 
 

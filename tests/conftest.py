@@ -90,19 +90,13 @@ def pytest_collection_modifyitems(config, items):
 @pytest.fixture(scope="session")
 def spark():
     # Suite wall-clock is ~600 tiny Spark jobs dominated by per-job task
-    # scheduling, not data volume. Measured whole-suite (under heavy
-    # external container contention, so ±10% noise): local[8]/sh8 205s,
-    # local[16]/sh16 211s, local[16]/sh4 230s, local[16]/sh8 226s —
-    # local[8] wins; more local threads just add dispatch overhead for
-    # MB-scale partitions. Shuffle/RDD compression off: tiny data; none
-    # of these knobs exist in the production session factory, where AQE
-    # sizes partitions.
+    # scheduling, not data volume: more local threads than 8 just add
+    # dispatch overhead for MB-scale partitions. The session runs at the
+    # engine's own shuffle width (session.RUNTIME_CONFS), the width every
+    # query sees on a driver session. Shuffle/RDD compression off: tiny
+    # data; none of these knobs exist in the production session factory.
     cpus = os.environ.get("IRIS_PYSPARK_TEST_CPUS", "8")
-    s = get_spark(
-        app_name="iris-pyspark-tests",
-        master=f"local[{cpus}]",
-        shuffle_partitions=8,
-    )
+    s = get_spark(app_name="iris-pyspark-tests", master=f"local[{cpus}]")
     for k, v in {
         "spark.shuffle.compress": "false",
         "spark.shuffle.spill.compress": "false",

@@ -6,8 +6,10 @@ from __future__ import annotations
 import os
 from urllib.parse import urlparse
 
+import pytest
 from pyspark.sql import functions as F
 
+from iris_pyspark_spark.session import scoped_confs
 from iris_pyspark_spark.streaming import DRAIN_STATE_PARTITIONS, drain, drain_to_table
 
 
@@ -54,6 +56,21 @@ def test_drain_policy_is_scoped_to_the_drain(spark, tmp_path):
     state = progress[0]["stateOperators"][0]
     assert state["numShufflePartitions"] == DRAIN_STATE_PARTITIONS
     assert after == before
+
+
+def test_scoped_confs_restore_or_unset(spark):
+    """scoped_confs sets each conf for its block only: a conf that was
+    set gets its prior value back, one that was not set is unset, and
+    both happen when the block raises too."""
+    set_key, unset_key = "spark.sql.shuffle.partitions", "spark.iris.test.scoped"
+    s = spark.newSession()
+    s.conf.set(set_key, "5")
+    assert s.conf.get(unset_key, None) is None
+    with pytest.raises(KeyError), scoped_confs(s, {set_key: "7", unset_key: "on"}):
+        assert (s.conf.get(set_key), s.conf.get(unset_key)) == ("7", "on")
+        raise KeyError("leave the block early")
+    assert s.conf.get(set_key) == "5"
+    assert s.conf.get(unset_key, None) is None
 
 
 def test_drains_leave_no_sink_views(spark, tmp_path):

@@ -103,8 +103,8 @@ def test_registered_query_body_imports_resolve():
     assert not problems, "\n".join(problems)
 
 
-#: (banned pattern, the one top-level subpackage allowed to use it, or
-#: None for nowhere). Each primitive owns a job so that no module
+#: (banned pattern, the top-level subpackages or modules allowed to use
+#: it; empty for nowhere). Each primitive owns a job so that no module
 #: hand-rolls it:
 #:   * sources.materialize owns the scratch-artifact check → build →
 #:     record → mark sequence (a hand-rolled build would skip
@@ -112,32 +112,39 @@ def test_registered_query_body_imports_resolve():
 #:   * streaming.drain owns starting and awaiting every streaming query,
 #:     with its state-partition policy and restored confs;
 #:   * drains size state from DRAIN_STATE_PARTITIONS, so no engine code
-#:     passes a partition count of its own.
+#:     passes a partition count of its own;
+#:   * session.configure applies the runtime confs once per session, and
+#:     only the registry's query door calls it;
+#:   * session.scoped_confs is the one conf writer: every override is
+#:     restored when its block ends.
 _OWNED_SEAMS = (
-    (r"\b(artifact_is_current|mark_artifact|record_build_seconds)\b", "sources"),
-    (r"availableNow|awaitTermination", "streaming"),
-    (r"\bshuffle_partitions=", None),
+    (r"\b(artifact_is_current|mark_artifact|record_build_seconds)\b", ("sources",)),
+    (r"availableNow|awaitTermination", ("streaming",)),
+    (r"\bshuffle_partitions=", ()),
+    (r"\bconfigure\(", ("session", "registry")),
+    (r"conf\.(set|unset)\(", ("session",)),
 )
 
 
 def test_engine_seams_go_through_their_primitive():
-    """No engine module outside a seam's owner matches its banned
-    pattern (see _OWNED_SEAMS)."""
+    """No engine module outside a seam's owners matches its banned
+    pattern (see _OWNED_SEAMS). A file's owner name is its top-level
+    subpackage, or for a top-level module its name without `.py`."""
     import re
 
     pkg = os.path.dirname(inspect.getfile(load_all))
-    seams = [(re.compile(pat), owner) for pat, owner in _OWNED_SEAMS]
+    seams = [(re.compile(pat), owners) for pat, owners in _OWNED_SEAMS]
     hits = []
     for dirpath, _dirnames, filenames in os.walk(pkg):
-        subpkg = os.path.relpath(dirpath, pkg).split(os.sep)[0]
         for fname in filenames:
             if not fname.endswith(".py"):
                 continue
             path = os.path.join(dirpath, fname)
+            top = os.path.relpath(path, pkg).split(os.sep)[0].removesuffix(".py")
             with open(path) as f:
                 for lineno, line in enumerate(f, 1):
-                    for banned, owner in seams:
-                        if subpkg != owner and banned.search(line):
+                    for banned, owners in seams:
+                        if top not in owners and banned.search(line):
                             hits.append(
                                 f"{os.path.relpath(path, pkg)}:{lineno}: {line.strip()}"
                             )
