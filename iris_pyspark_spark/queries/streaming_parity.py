@@ -384,8 +384,6 @@ def st_complete_mode_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals the batch aggregate exactly. Complete mode only scales when
     the aggregate itself is small — per-type counts here — which is
     exactly when you'd use it (dashboards over bounded key spaces)."""
-    from ..streaming import drain_to_table, read_events_stream
-
     e = read_events_stream(spark, sf_dir)
     agg = e.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -809,8 +807,6 @@ def st_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: telemetry is O(batches), collected from the driver-side
     listener state after termination — no data-plane cost at all.
     """
-    from ..streaming import read_events_stream
-
     e = read_events_stream(spark, sf_dir)
     agg = (
         e.withWatermark("ts", "10 minutes")
@@ -877,8 +873,6 @@ def st_replay_determinism(spark: SparkSession, sf_dir: str) -> DataFrame:
         cents) row exactly (full outer join finds no one-sided rows);
       * both_present_ok — neither side's row is missing.
     """
-    from ..streaming import drain_to_table, read_events_stream
-
     def one_drain():
         e = read_events_stream(spark, sf_dir)
         agg = (

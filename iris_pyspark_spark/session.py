@@ -92,22 +92,43 @@ def configure(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _put(spark: SparkSession, key: str, value: str | None) -> None:
+    if value is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, value)
+
+
 @contextmanager
-def scoped_confs(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
-    """Set `confs` for the block, then put each back: its prior value,
-    or unset if it had none. The one way engine code overrides a conf,
-    so no override outlives the query that needed it."""
+def scoped_confs(
+    spark: SparkSession, confs: dict[str, str | None]
+) -> Iterator[None]:
+    """Set `confs` for the block (a `None` value unsets the conf), then
+    put each back: its prior value, or unset if it had none. The one
+    way engine code overrides a conf, so no override outlives the query
+    that needed it."""
     prior = {k: spark.conf.get(k, None) for k in confs}
     try:
         for k, v in confs.items():
-            spark.conf.set(k, v)
+            _put(spark, k, v)
         yield
     finally:
         for k, v in prior.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+            _put(spark, k, v)
+
+
+#: Spark's generated-class cache (`spark.sql.codegen.cache.maxEntries`)
+#: for the sessions `get_spark` builds. The cache is an LRU of 100
+#: classes by default, and a many-query session needs more: one pass of
+#: perfbench's 22-query breadth list needs about 195 (whole-stage code
+#: plus projections, predicates and orderings), so at 100 every class is
+#: evicted before its next use and each pass re-runs Janino and the JIT
+#: on all of them. A full registry preflight at sf0.01 (674 queries)
+#: compiles 7,715 distinct classes, measured with an unbounded cache;
+#: 8000 rounds that up. The conf is static: it works only in the
+#: builder, before the session exists, so `configure` cannot apply it
+#: and a session a driver hands in keeps Spark's 100.
+CODEGEN_CACHE_ENTRIES = 8000
 
 
 def get_spark(
@@ -130,6 +151,7 @@ def get_spark(
             "spark.driver.extraJavaOptions",
             "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",
         )
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

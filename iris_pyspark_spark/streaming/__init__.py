@@ -127,12 +127,19 @@ def drain(
     the terminated query (its `recentProgress` is the drain's
     telemetry). The one place the engine starts a streaming query.
 
-    For this drain only, two confs are set and then restored:
+    For this drain only, three confs are overridden and then restored:
 
     * `spark.sql.shuffle.partitions` = DRAIN_STATE_PARTITIONS. The
       streaming path gets no AQE coalescing, so this is the state-store
       count of every stateful operator. A persistent checkpoint keeps
       the count its first run recorded.
+    * `spark.sql.streaming.checkpointLocation` is unset. Under a
+      session checkpoint root, Spark keeps a named query's checkpoint
+      at `<root>/<queryName>` for good, and a later process reusing the
+      name (sink names restart at `stream_sink_0`) would resume that
+      checkpoint instead of draining its source. Unset, every drain
+      gets a temporary checkpoint that Spark deletes on success; a
+      writer's own `checkpointLocation` option still wins.
     * the trailing no-data micro-batch is skipped in complete mode, and
       whenever the caller passes `no_data_microbatches=False`. Spark
       schedules that batch so watermark expiry can flush state (append
@@ -143,7 +150,10 @@ def drain(
       (dedup, inner stream-stream join) may skip it too; a query whose
       final rows come from watermark expiry must not."""
     spark = writer._spark  # DataStreamWriter has no public session accessor
-    overrides = {"spark.sql.shuffle.partitions": str(DRAIN_STATE_PARTITIONS)}
+    overrides: dict[str, str | None] = {
+        "spark.sql.shuffle.partitions": str(DRAIN_STATE_PARTITIONS),
+        "spark.sql.streaming.checkpointLocation": None,
+    }
     if output_mode == "complete" or not no_data_microbatches:
         overrides["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
     with scoped_confs(spark, overrides):

@@ -3,14 +3,18 @@ conf policy, and what it leaves behind in the session and on disk."""
 
 from __future__ import annotations
 
+import itertools
 import os
 from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import functions as F
 
+from iris_pyspark_spark import streaming
 from iris_pyspark_spark.session import scoped_confs
 from iris_pyspark_spark.streaming import DRAIN_STATE_PARTITIONS, drain, drain_to_table
+
+CHECKPOINT_ROOT = "spark.sql.streaming.checkpointLocation"
 
 
 def _stream(spark, tmp_path):
@@ -60,17 +64,23 @@ def test_drain_policy_is_scoped_to_the_drain(spark, tmp_path):
 
 def test_scoped_confs_restore_or_unset(spark):
     """scoped_confs sets each conf for its block only: a conf that was
-    set gets its prior value back, one that was not set is unset, and
-    both happen when the block raises too."""
+    set gets its prior value back, one that was not set is unset, one
+    given as None is unset for the block and then restored, and all
+    three happen when the block raises too."""
     set_key, unset_key = "spark.sql.shuffle.partitions", "spark.iris.test.scoped"
+    hidden_key = "spark.iris.test.hidden"
     s = spark.newSession()
     s.conf.set(set_key, "5")
+    s.conf.set(hidden_key, "kept")
     assert s.conf.get(unset_key, None) is None
-    with pytest.raises(KeyError), scoped_confs(s, {set_key: "7", unset_key: "on"}):
+    scope = {set_key: "7", unset_key: "on", hidden_key: None}
+    with pytest.raises(KeyError), scoped_confs(s, scope):
         assert (s.conf.get(set_key), s.conf.get(unset_key)) == ("7", "on")
+        assert s.conf.get(hidden_key, None) is None
         raise KeyError("leave the block early")
     assert s.conf.get(set_key) == "5"
     assert s.conf.get(unset_key, None) is None
+    assert s.conf.get(hidden_key) == "kept"
 
 
 def test_drains_leave_no_sink_views(spark, tmp_path):
@@ -94,11 +104,13 @@ def test_drains_leave_no_sink_views(spark, tmp_path):
 
 
 def test_successful_drains_delete_their_temporary_checkpoints(spark, tmp_path):
-    """A drain without a checkpointLocation gets a fresh temporary
-    checkpoint, which Spark deletes when the query succeeds — for the
-    memory sink and for foreachBatch alike, so drains need no cleanup
-    code of their own."""
+    """A drain without a checkpointLocation option gets a fresh
+    temporary checkpoint, also under a session checkpoint root, which
+    Spark deletes when the query succeeds — for the memory sink and for
+    foreachBatch alike, so drains need no cleanup code of their own and
+    leave nothing in the root."""
     stream = _stream(spark, tmp_path)
+    root = tmp_path / "checkpoint_root"
 
     def root_dir(q) -> str:
         return urlparse(q._jsq.streamingQuery().resolvedCheckpointRoot()).path
@@ -109,11 +121,35 @@ def test_successful_drains_delete_their_temporary_checkpoints(spark, tmp_path):
         for active in spark.streams.active:
             live[root_dir(active)] = os.path.isdir(root_dir(active))
 
-    fb = drain(stream.writeStream.foreachBatch(probe))
-    assert live.get(root_dir(fb)) is True  # it existed during the batch
-    counts = stream.groupBy("k").count()
-    mem = drain(counts.writeStream.format("memory").queryName("ckpt_probe"), "complete")
+    with scoped_confs(spark, {CHECKPOINT_ROOT: str(root)}):
+        fb = drain(stream.writeStream.foreachBatch(probe))
+        counts = stream.groupBy("k").count()
+        mem = drain(
+            counts.writeStream.format("memory").queryName("ckpt_probe"), "complete"
+        )
     spark.catalog.dropTempView("ckpt_probe")
+    assert live.get(root_dir(fb)) is True  # it existed during the batch
     for q in (fb, mem):
         assert os.path.basename(root_dir(q)).startswith("temporary-")
         assert not os.path.exists(root_dir(q))
+    assert not root.exists() or not any(root.iterdir())
+
+
+def test_drains_under_a_checkpoint_root_do_not_resume_another_process(
+    spark, tmp_path, monkeypatch
+):
+    """Sink names restart at stream_sink_0 in every process. Under a
+    session checkpoint root, a drain that kept `<root>/stream_sink_0`
+    would be resumed by the next process's first drain, which then
+    reads no new input and returns no rows. Resetting the sink ids
+    stands in for the new process: both drains return every group, and
+    the root stays empty."""
+    stream = _stream(spark, tmp_path)
+    root = tmp_path / "checkpoint_root"
+    rows = []
+    with scoped_confs(spark, {CHECKPOINT_ROOT: str(root)}):
+        for _ in range(2):
+            monkeypatch.setattr(streaming, "_SINK_IDS", itertools.count())
+            rows.append(drain_to_table(stream.groupBy("k").count(), "complete").count())
+    assert rows == [3, 3]
+    assert not root.exists() or not any(root.iterdir())

@@ -1,10 +1,15 @@
 """The session policy: the registry door applies the engine's runtime
-confs once per session, and a conf the caller sets afterwards holds."""
+confs once per session, and a conf the caller sets afterwards holds;
+`get_spark`'s generated-class cache holds a many-query session's
+classes."""
 
 from __future__ import annotations
 
+import os
+
 from iris_pyspark_spark.registry import load_all
-from iris_pyspark_spark.session import RUNTIME_CONFS
+from iris_pyspark_spark.session import CODEGEN_CACHE_ENTRIES, RUNTIME_CONFS, scoped_confs
+from perfbench.workloads import BREADTH
 
 
 def test_registry_door_configures_once_and_caller_confs_hold(spark, sf_dir):
@@ -19,3 +24,34 @@ def test_registry_door_configures_once_and_caller_confs_hold(spark, sf_dir):
     s.conf.set("spark.sql.shuffle.partitions", "3")
     q.fn(s, sf_dir)
     assert s.conf.get("spark.sql.shuffle.partitions") == "3"
+
+
+def _classes_compiled(spark) -> int:
+    """Generated classes Janino has compiled in this JVM so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_warm_rerun_compiles_no_classes(spark, sf_dir):
+    """Spark keeps generated classes in an LRU of
+    `spark.sql.codegen.cache.maxEntries` entries. A query list that
+    needs more classes than the cache holds (Spark's default is 100)
+    evicts each class before its next use, so every re-run compiles
+    them all again. perfbench's breadth list, run into the `noop` sink
+    with whole-stage codegen on as in a production session, needs more
+    than 100; on `get_spark`'s session its second run compiles none."""
+    cache_size = spark.conf.get("spark.sql.codegen.cache.maxEntries")
+    assert cache_size == str(CODEGEN_CACHE_ENTRIES)
+    reg = load_all()
+    small = os.path.join(os.path.dirname(sf_dir), "sf0.001")
+
+    def run_list() -> int:
+        before = _classes_compiled(spark)
+        for name in BREADTH:
+            reg[name].fn(spark, small).write.format("noop").mode("overwrite").save()
+        return _classes_compiled(spark) - before
+
+    with scoped_confs(spark, {"spark.sql.codegen.wholeStage": "true"}):
+        first, second = run_list(), run_list()
+    assert first > 100, f"the list compiled only {first} classes"
+    assert second == 0
