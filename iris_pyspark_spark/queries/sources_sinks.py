@@ -656,8 +656,8 @@ def st_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("rows_per_batch", "100")
             .load()
             .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
+            .option("path", sink),
+            checkpoint=ckpt,
         )
 
     seen = -1

@@ -342,8 +342,8 @@ def st_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.readStream.schema(schema)
             .parquet(src)
             .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
+            .option("path", sink),
+            checkpoint=ckpt,
         )
 
     # Run 1: first half of the files.

@@ -29,6 +29,7 @@ from __future__ import annotations
 import itertools
 import os
 import shutil
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -117,17 +118,44 @@ ROCKSDB_STATE_STORE = {
 }
 
 
+#: Spark's checkpoint manager that writes and renames through Hadoop's
+#: FileSystem API (the class name in `spark-sql` 4.1).
+FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def checkpoint_on_local_fs(spark: SparkSession, checkpoint: str | None) -> bool:
+    """Whether a drain's checkpoint resolves to a `file:` URI. The
+    scheme is the location's own; a scheme-less path, or `None` (Spark's
+    temporary checkpoint, a scheme-less local path), resolves against
+    the session's `fs.defaultFS`, as Spark qualifies it."""
+    scheme = urlparse(checkpoint or "").scheme
+    if not scheme:
+        # newHadoopConf is the Hadoop conf Spark resolves the path with.
+        default_fs = spark._jsparkSession.sessionState().newHadoopConf().get(
+            "fs.defaultFS", "file:///"
+        )
+        scheme = urlparse(default_fs).scheme
+    return scheme.lower() == "file"
+
+
 def drain(
     writer: DataStreamWriter,
     output_mode: str = "append",
     *,
+    checkpoint: str | None = None,
     no_data_microbatches: bool = True,
 ) -> StreamingQuery:
     """Run `writer`'s query to completion with AvailableNow and return
     the terminated query (its `recentProgress` is the drain's
     telemetry). The one place the engine starts a streaming query.
+    `checkpoint` is the query's checkpoint location; `None` gives it a
+    temporary one, which Spark deletes when the drain succeeds.
 
-    For this drain only, three confs are overridden and then restored:
+    For this drain only, up to four confs are overridden and then
+    restored:
 
     * `spark.sql.shuffle.partitions` = DRAIN_STATE_PARTITIONS. The
       streaming path gets no AQE coalescing, so this is the state-store
@@ -137,9 +165,20 @@ def drain(
       session checkpoint root, Spark keeps a named query's checkpoint
       at `<root>/<queryName>` for good, and a later process reusing the
       name (sink names restart at `stream_sink_0`) would resume that
-      checkpoint instead of draining its source. Unset, every drain
-      gets a temporary checkpoint that Spark deletes on success; a
-      writer's own `checkpointLocation` option still wins.
+      checkpoint instead of draining its source. Unset, a drain without
+      `checkpoint` gets a temporary checkpoint.
+    * `spark.sql.streaming.checkpointFileManagerClass` =
+      FS_CHECKPOINT_MANAGER when the checkpoint is on the local
+      filesystem (`checkpoint_on_local_fs`). Spark's default manager
+      goes through Hadoop's FileContext, which can replace a file by
+      an atomic rename on HDFS, where a FileSystem rename cannot, but
+      which, without Hadoop's native library, forks `readlink`
+      processes for each file it renames. A local rename replaces a
+      file atomically through either API, so there the two give the
+      same guarantee; HDFS and object stores keep the default. The
+      conf also reaches a file sink's `_spark_metadata` log, wherever
+      the sink is; that log never replaces a file, and a rename that
+      must not replace one is atomic on HDFS through either API.
     * the trailing no-data micro-batch is skipped in complete mode, and
       whenever the caller passes `no_data_microbatches=False`. Spark
       schedules that batch so watermark expiry can flush state (append
@@ -154,8 +193,14 @@ def drain(
         "spark.sql.shuffle.partitions": str(DRAIN_STATE_PARTITIONS),
         "spark.sql.streaming.checkpointLocation": None,
     }
+    if checkpoint_on_local_fs(spark, checkpoint):
+        overrides["spark.sql.streaming.checkpointFileManagerClass"] = (
+            FS_CHECKPOINT_MANAGER
+        )
     if output_mode == "complete" or not no_data_microbatches:
         overrides["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    if checkpoint is not None:
+        writer = writer.option("checkpointLocation", checkpoint)
     with scoped_confs(spark, overrides):
         q = writer.outputMode(output_mode).trigger(availableNow=True).start()
         q.awaitTermination()

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import itertools
 import os
+from contextlib import contextmanager
 from urllib.parse import urlparse
 
 import pytest
@@ -12,9 +13,20 @@ from pyspark.sql import functions as F
 
 from iris_pyspark_spark import streaming
 from iris_pyspark_spark.session import scoped_confs
-from iris_pyspark_spark.streaming import DRAIN_STATE_PARTITIONS, drain, drain_to_table
+from iris_pyspark_spark.streaming import (
+    DRAIN_STATE_PARTITIONS,
+    FS_CHECKPOINT_MANAGER,
+    checkpoint_on_local_fs,
+    drain,
+    drain_to_table,
+)
 
 CHECKPOINT_ROOT = "spark.sql.streaming.checkpointLocation"
+CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+FILE_CONTEXT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
 
 
 def _stream(spark, tmp_path):
@@ -153,3 +165,95 @@ def test_drains_under_a_checkpoint_root_do_not_resume_another_process(
             rows.append(drain_to_table(stream.groupBy("k").count(), "complete").count())
     assert rows == [3, 3]
     assert not root.exists() or not any(root.iterdir())
+
+
+class _Captured(Exception):
+    pass
+
+
+def _drain_overrides(monkeypatch, writer, **kwargs) -> dict:
+    """The confs `drain` scopes for `writer`, captured at the
+    `scoped_confs` call, before the query starts (so a remote root
+    is never contacted)."""
+    captured: dict = {}
+
+    @contextmanager
+    def capture(spark, confs):
+        captured.update(confs)
+        raise _Captured
+        yield
+
+    monkeypatch.setattr(streaming, "scoped_confs", capture)
+    with pytest.raises(_Captured):
+        drain(writer, **kwargs)
+    return captured
+
+
+@pytest.mark.parametrize(
+    "checkpoint, local",
+    [
+        ("file:///tmp/ckpt", True),
+        ("/tmp/ckpt", True),
+        (None, True),
+        ("hdfs://nn/x", False),
+        ("s3a://b/x", False),
+    ],
+)
+def test_checkpoint_manager_follows_the_checkpoint_root(
+    spark, tmp_path, monkeypatch, checkpoint, local
+):
+    """A drain overrides the checkpoint manager only for a checkpoint on
+    the local filesystem: a `file:` URI, or a scheme-less path or
+    Spark's temporary checkpoint under the default `fs.defaultFS`.
+    HDFS and object stores keep Spark's FileContext default."""
+    writer = _stream(spark, tmp_path).writeStream.format("noop")
+    overrides = _drain_overrides(monkeypatch, writer, checkpoint=checkpoint)
+    expected = FS_CHECKPOINT_MANAGER if local else None
+    assert overrides.get(CHECKPOINT_MANAGER) == expected
+
+
+def test_scheme_less_checkpoints_follow_the_default_filesystem(spark):
+    """A scheme-less checkpoint and Spark's temporary one resolve against
+    the session's `fs.defaultFS`, so under an HDFS default they keep
+    Spark's manager; a `file:` URI still gets the FileSystem one."""
+    s = spark.newSession()
+    s.conf.set("fs.defaultFS", "hdfs://nn:8020")
+    assert not checkpoint_on_local_fs(s, "/tmp/ckpt")
+    assert not checkpoint_on_local_fs(s, None)
+    assert checkpoint_on_local_fs(s, "file:///tmp/ckpt")
+
+
+def test_local_drains_run_the_filesystem_checkpoint_manager(spark, tmp_path):
+    """Inside a foreachBatch drain over a temporary, a `file:` and a
+    scheme-less checkpoint, both the session and the query's own session
+    read the FileSystem-based manager, and the query's offset log writes
+    through it; after each drain the session's conf is back to its
+    prior value, or unset, also when the batch function raises."""
+    stream = _stream(spark, tmp_path)
+    assert spark.conf.get(CHECKPOINT_MANAGER, None) is None
+    seen = []
+
+    def probe(batch_df, batch_id):
+        seen.append(
+            (
+                spark.conf.get(CHECKPOINT_MANAGER, None),
+                batch_df.sparkSession.conf.get(CHECKPOINT_MANAGER, None),
+            )
+        )
+
+    for checkpoint in (None, f"file://{tmp_path}/ck1", str(tmp_path / "ck2")):
+        q = drain(stream.writeStream.foreachBatch(probe), checkpoint=checkpoint)
+        assert spark.conf.get(CHECKPOINT_MANAGER, None) is None
+        offset_log = q._jsq.streamingQuery().offsetLog()
+        assert offset_log.fileManager().getClass().getName() == FS_CHECKPOINT_MANAGER
+    with scoped_confs(spark, {CHECKPOINT_MANAGER: FILE_CONTEXT_MANAGER}):
+        drain(stream.writeStream.foreachBatch(probe))
+        assert spark.conf.get(CHECKPOINT_MANAGER) == FILE_CONTEXT_MANAGER
+    assert seen == [(FS_CHECKPOINT_MANAGER, FS_CHECKPOINT_MANAGER)] * 4
+
+    def fail(batch_df, batch_id):
+        raise RuntimeError("batch failed")
+
+    with pytest.raises(Exception, match="batch failed"):
+        drain(stream.writeStream.foreachBatch(fail))
+    assert spark.conf.get(CHECKPOINT_MANAGER, None) is None

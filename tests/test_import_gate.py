@@ -111,6 +111,9 @@ def test_registered_query_body_imports_resolve():
 #:     ARTIFACT_BUILD_SECONDS or the completeness rules);
 #:   * streaming.drain owns starting and awaiting every streaming query,
 #:     with its state-partition policy and restored confs;
+#:   * streaming.drain owns each query's checkpoint location and the
+#:     checkpoint manager chosen for it, so no query picks either one
+#:     behind the drain's back;
 #:   * drains size state from DRAIN_STATE_PARTITIONS, so no engine code
 #:     passes a partition count of its own;
 #:   * session.configure applies the runtime confs once per session, and
@@ -120,6 +123,7 @@ def test_registered_query_body_imports_resolve():
 _OWNED_SEAMS = (
     (r"\b(artifact_is_current|mark_artifact|record_build_seconds)\b", ("sources",)),
     (r"availableNow|awaitTermination", ("streaming",)),
+    (r"checkpointLocation|checkpointFileManagerClass", ("streaming",)),
     (r"\bshuffle_partitions=", ()),
     (r"\bconfigure\(", ("session", "registry")),
     (r"conf\.(set|unset)\(", ("session",)),

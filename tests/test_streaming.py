@@ -3,7 +3,9 @@ source can't show. Two separate AvailableNow runs share a checkpoint:
 run 1 advances the watermark past 11:50 and finalizes the 10:00 window;
 run 2 delivers a too-late event (must be dropped, not re-opened) plus a
 fresh one (enters state, never finalizes). This also exercises
-checkpoint restart recovery.
+checkpoint restart recovery, through `streaming.drain` and so under its
+checkpoint policy (a persistent `file:` checkpoint, with the
+FileSystem-based checkpoint manager).
 """
 
 from __future__ import annotations
@@ -14,7 +16,7 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from iris_pyspark_spark.streaming import EVENTS_RAW_SCHEMA
+from iris_pyspark_spark.streaming import EVENTS_RAW_SCHEMA, drain
 
 
 def _ns(hh: int, mm: int) -> int:
@@ -45,15 +47,12 @@ def _drain(spark, src, checkpoint, sink_dir):
             "n",
         )
     )
-    q = (
+    drain(
         counts.writeStream.format("parquet")  # file sink: checkpoint-recoverable
-        .option("path", sink_dir)
-        .outputMode("append")  # append: only watermark-finalized windows emit
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+        .option("path", sink_dir),
+        "append",  # append: only watermark-finalized windows emit
+        checkpoint=checkpoint,
     )
-    q.awaitTermination()
     return {r.w: r.n for r in spark.read.parquet(sink_dir).collect()}
 
 
@@ -120,13 +119,7 @@ def test_foreach_batch_sink(spark, tmp_path_factory):
             .parquet(os.path.join(out_dir, f"batch={batch_id}"))
         )
 
-    q = (
-        read_events_stream(spark, sf_dir)
-        .writeStream.foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(read_events_stream(spark, sf_dir).writeStream.foreachBatch(write_batch))
 
     got = spark.read.parquet(out_dir + "/batch=*")
     total = got.groupBy().sum("count").collect()[0][0]
