@@ -100,17 +100,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.readStream.schema(_events_raw_schema(T.TimestampType())).parquet(src)
 
 
-#: Shuffle (= state-store) partitions for every drain, whatever the
-#: session's `spark.sql.shuffle.partitions`. A drain is bounded: it
-#: replays one finite source and stops, so its state volume is the
-#: size of the final answer (a few thousand rows here), and every
-#: stateful operator loads and commits one state store per partition
-#: per micro-batch. The count only spreads keys over state stores, so
-#: it cannot change a drained answer (each st_* query's oracle checks
-#: the answer); it only prices the drain. An unbounded deployment sizes
-#: state from its own state volume instead.
-DRAIN_STATE_PARTITIONS = 8
-
 #: The state store a large deployment runs, for `session.scoped_confs`.
 ROCKSDB_STATE_STORE = {
     "spark.sql.streaming.stateStore.providerClass":
@@ -157,9 +146,15 @@ def drain(
     For this drain only, up to four confs are overridden and then
     restored:
 
-    * `spark.sql.shuffle.partitions` = DRAIN_STATE_PARTITIONS. The
-      streaming path gets no AQE coalescing, so this is the state-store
-      count of every stateful operator. A persistent checkpoint keeps
+    * `spark.sql.shuffle.partitions` = the session's task slots
+      (`SparkContext.defaultParallelism`: N on `local[N]`, the total
+      executor cores on a cluster, or `spark.default.parallelism` when
+      set). The streaming path gets no AQE coalescing, so this is the
+      state-store count of every stateful operator: one store per
+      slot, so each stateful stage of each micro-batch runs as one
+      wave, and every extra store would be one more task that loads
+      and commits state. The count only spreads keys over stores, so
+      it cannot change a drained answer. A persistent checkpoint keeps
       the count its first run recorded.
     * `spark.sql.streaming.checkpointLocation` is unset. Under a
       session checkpoint root, Spark keeps a named query's checkpoint
@@ -190,7 +185,7 @@ def drain(
       final rows come from watermark expiry must not."""
     spark = writer._spark  # DataStreamWriter has no public session accessor
     overrides: dict[str, str | None] = {
-        "spark.sql.shuffle.partitions": str(DRAIN_STATE_PARTITIONS),
+        "spark.sql.shuffle.partitions": str(spark.sparkContext.defaultParallelism),
         "spark.sql.streaming.checkpointLocation": None,
     }
     if checkpoint_on_local_fs(spark, checkpoint):

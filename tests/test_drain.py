@@ -9,12 +9,12 @@ from contextlib import contextmanager
 from urllib.parse import urlparse
 
 import pytest
+from pyspark import SparkContext
 from pyspark.sql import functions as F
 
 from iris_pyspark_spark import streaming
 from iris_pyspark_spark.session import scoped_confs
 from iris_pyspark_spark.streaming import (
-    DRAIN_STATE_PARTITIONS,
     FS_CHECKPOINT_MANAGER,
     checkpoint_on_local_fs,
     drain,
@@ -40,11 +40,10 @@ def _temp_views(spark) -> int:
     return sum(t.isTemporary for t in spark.catalog.listTables())
 
 
-def test_drain_policy_is_scoped_to_the_drain(spark, tmp_path):
-    """Every drain runs its state stores at DRAIN_STATE_PARTITIONS and a
-    complete-mode drain skips the trailing no-data batch (one data
-    batch, not two, although the watermarked dedup would ask for an
-    eviction batch); the session's own confs are back afterwards."""
+def _drain_policy(spark, tmp_path) -> tuple[int, dict, dict]:
+    """Drain a watermarked dedup + count in complete mode under a
+    session shuffle width of 5: the state partitions of its one batch,
+    and the session's confs before and after the drain."""
     stream = _stream(spark, tmp_path).withColumn(
         "ts", F.timestamp_seconds(F.col("id"))
     )
@@ -53,7 +52,7 @@ def test_drain_policy_is_scoped_to_the_drain(spark, tmp_path):
         "spark.sql.streaming.noDataMicroBatches.enabled",
     )
     saved = spark.conf.get(keys[0])
-    spark.conf.set(keys[0], "3")  # a session value the drain must not use
+    spark.conf.set(keys[0], "5")  # a session value the drain must not use
     try:
         before = {k: spark.conf.get(k) for k in keys}
         agg = (
@@ -69,8 +68,27 @@ def test_drain_policy_is_scoped_to_the_drain(spark, tmp_path):
     progress = [p for p in q.recentProgress if p is not None]
     assert len(progress) == 1
     assert progress[0]["numInputRows"] == 100
-    state = progress[0]["stateOperators"][0]
-    assert state["numShufflePartitions"] == DRAIN_STATE_PARTITIONS
+    return progress[0]["stateOperators"][0]["numShufflePartitions"], before, after
+
+
+def test_drain_policy_is_scoped_to_the_drain(spark, tmp_path):
+    """Every drain runs one state store per task slot of the session
+    (`defaultParallelism`), not at the session's shuffle width, and a
+    complete-mode drain skips the trailing no-data batch (one data
+    batch, not two, although the watermarked dedup would ask for an
+    eviction batch); the session's own confs are back afterwards."""
+    partitions, before, after = _drain_policy(spark, tmp_path)
+    assert partitions == spark.sparkContext.defaultParallelism
+    assert after == before
+
+
+def test_drain_state_partitions_follow_the_task_slots(spark, tmp_path, monkeypatch):
+    """With the session's slot count reading 3, a drain runs 3 state
+    stores: the count follows the slots, not a constant or the
+    session's shuffle width (5); the session's confs are restored."""
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda sc: 3))
+    partitions, before, after = _drain_policy(spark, tmp_path)
+    assert partitions == 3
     assert after == before
 
 
