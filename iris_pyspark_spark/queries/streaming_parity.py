@@ -616,10 +616,9 @@ def st_pipeline_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # Complete-mode drain: the final answer is identical under any state
-    # partitioning, and every batch emits the full result — so one state
-    # store per task slot (not the batch width) and no trailing no-data
-    # batch. Cuts the fixed micro-batch overhead ~40% (2.98s -> 1.5-1.9s
-    # at sf0.1).
+    # partitioning, and every batch emits the full result — so the drain
+    # sizes state itself (`streaming.drain`) and skips the trailing
+    # no-data batch.
     return drain_to_table(agg, output_mode="complete")
 
 
@@ -1815,8 +1814,7 @@ def st_dedup_sliding_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two state stores — dedup keys within the watermark bound,
     open sliding windows x types — both watermark-bounded; one shuffle
     per stateful operator. Complete-mode drain (the final window count
-    is small) with one state store per task slot. Single-batch assumption
-    (load-bearing, pinned by
+    is small). Single-batch assumption (load-bearing, pinned by
     tests/test_streaming.py::test_read_events_stream_stages_one_file):
     with one data micro-batch the watermarked dropDuplicates sees every
     row before the watermark advances, so nothing is dropped as late
@@ -1898,8 +1896,8 @@ def st_session_static_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the static side is broadcast per micro-batch; session state
     is O(open sessions); one shuffle on the session key. Complete-mode
-    drain (bounded session census), one state store per task slot.
-    Single-batch source assumption as pinned by
+    drain (bounded session census). Single-batch source assumption as
+    pinned by
     tests/test_streaming.py::test_read_events_stream_stages_one_file."""
     e = read_events_stream(spark, sf_dir)
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
@@ -1976,8 +1974,7 @@ def st_sliding_star_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the star collapses to a few hundred keys before the stream
     ever sees it — resolved once, broadcast per micro-batch; sliding
     state is (open windows x types); one shuffle per batch on the
-    window/type key. Complete-mode drain, one state store per task
-    slot."""
+    window/type key. Complete-mode drain."""
     e = read_events_stream(spark, sf_dir)
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
@@ -2057,8 +2054,8 @@ def st_session_dedup_quiet(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: dedup state is watermark-bounded keys; session state is
     O(open sessions); two shuffles per batch (dedup key, session key).
-    Complete-mode drain, one state store per task slot. Single-batch
-    source assumption pinned by test_read_events_stream_stages_one_file."""
+    Complete-mode drain. Single-batch source assumption pinned by
+    test_read_events_stream_stages_one_file."""
     e = read_events_stream(spark, sf_dir)
     deduped = (
         e.select(
@@ -2366,8 +2363,8 @@ def st_sliding_static_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the static side collapses to a key list broadcast per
     micro-batch; sliding state is 3 open windows x <=5 bands; one
-    shuffle per batch on the window/band key. Complete-mode drain, one
-    state store per task slot. Single-batch source assumption as pinned."""
+    shuffle per batch on the window/band key. Complete-mode drain.
+    Single-batch source assumption as pinned."""
     e = read_events_stream(spark, sf_dir)
     rich = (
         load_table(spark, sf_dir, "customer")
@@ -2447,8 +2444,7 @@ def st_session_static_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the denylist broadcasts per micro-batch (anti joins never
     widen rows); session state is O(open sessions); one shuffle on the
-    session key per batch. Complete-mode drain, one state store per
-    task slot.
+    session key per batch. Complete-mode drain.
     Single-batch source assumption as pinned."""
     e = read_events_stream(spark, sf_dir)
     suspended = (
@@ -2522,8 +2518,8 @@ def st_tumbling_sliding_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: two independent streaming queries, each one shuffle per
     micro-batch on its window key; the union runs on drained census
-    rows, never inside the stream. Complete-mode drains, one state
-    store per task slot each. Single-batch source assumption as pinned."""
+    rows, never inside the stream. Complete-mode drains. Single-batch
+    source assumption as pinned."""
     tum_src = read_events_stream(spark, sf_dir)
     tum = (
         tum_src.withWatermark("ts", "10 minutes")
@@ -2615,8 +2611,8 @@ def st_type_session_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: dedup state is watermark-bounded (user, type, bucket) keys
     at 1/300th event granularity; session state is O(open typed
-    sessions); two shuffles per batch. Complete-mode drain, one state
-    store per task slot. Single-batch source assumption as pinned."""
+    sessions); two shuffles per batch. Complete-mode drain. Single-batch
+    source assumption as pinned."""
     e = read_events_stream(spark, sf_dir)
     grid = (
         e.select(

@@ -29,8 +29,8 @@ from pyspark.sql import SparkSession
 RUNTIME_CONFS: dict[str, str] = {
     # The width a batch shuffle starts at before AQE coalesces it (a
     # vanilla session's 200 writes 200 map-output blocks per mapper at
-    # MB scale). Streaming drains size their state stores from the
-    # session's task slots (defaultParallelism), not from this.
+    # MB scale). Streaming drains size their own state stores
+    # (streaming.drain), not from this.
     "spark.sql.shuffle.partitions": os.environ.get(
         "IRIS_PYSPARK_SHUFFLE_PARTITIONS", "32"
     ),

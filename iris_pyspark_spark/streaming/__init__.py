@@ -100,6 +100,15 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.readStream.schema(_events_raw_schema(T.TimestampType())).parquet(src)
 
 
+#: The most state stores a drain gives each stateful operator. A drain
+#: is bounded, so its state is the size of its final answer, and every
+#: store is one task per micro-batch that loads and commits state: past
+#: a few stores, more of them only add that fixed cost.
+#: `st_pipeline_ingest` at sf0.1 on `local[32]` (4-CPU host; medians of
+#: 6-8 runs in two interleaved probes) ran 1.54 s with 4 stores,
+#: 1.63 and 1.81 s with 8, 2.08 s with 16 and 3.50 s with 32.
+MAX_DRAIN_STATE_PARTITIONS = 8
+
 #: The state store a large deployment runs, for `session.scoped_confs`.
 ROCKSDB_STATE_STORE = {
     "spark.sql.streaming.stateStore.providerClass":
@@ -149,13 +158,12 @@ def drain(
     * `spark.sql.shuffle.partitions` = the session's task slots
       (`SparkContext.defaultParallelism`: N on `local[N]`, the total
       executor cores on a cluster, or `spark.default.parallelism` when
-      set). The streaming path gets no AQE coalescing, so this is the
-      state-store count of every stateful operator: one store per
-      slot, so each stateful stage of each micro-batch runs as one
-      wave, and every extra store would be one more task that loads
-      and commits state. The count only spreads keys over stores, so
-      it cannot change a drained answer. A persistent checkpoint keeps
-      the count its first run recorded.
+      set), at most MAX_DRAIN_STATE_PARTITIONS. The streaming path gets
+      no AQE coalescing, so this is the state-store count of every
+      stateful operator. Up to the cap, one store per slot runs each
+      stateful stage of each micro-batch as one wave. The count only
+      spreads keys over stores, so it cannot change a drained answer.
+      A persistent checkpoint keeps the count its first run recorded.
     * `spark.sql.streaming.checkpointLocation` is unset. Under a
       session checkpoint root, Spark keeps a named query's checkpoint
       at `<root>/<queryName>` for good, and a later process reusing the
@@ -185,7 +193,9 @@ def drain(
       final rows come from watermark expiry must not."""
     spark = writer._spark  # DataStreamWriter has no public session accessor
     overrides: dict[str, str | None] = {
-        "spark.sql.shuffle.partitions": str(spark.sparkContext.defaultParallelism),
+        "spark.sql.shuffle.partitions": str(
+            min(spark.sparkContext.defaultParallelism, MAX_DRAIN_STATE_PARTITIONS)
+        ),
         "spark.sql.streaming.checkpointLocation": None,
     }
     if checkpoint_on_local_fs(spark, checkpoint):

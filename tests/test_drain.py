@@ -16,6 +16,7 @@ from iris_pyspark_spark import streaming
 from iris_pyspark_spark.session import scoped_confs
 from iris_pyspark_spark.streaming import (
     FS_CHECKPOINT_MANAGER,
+    MAX_DRAIN_STATE_PARTITIONS,
     checkpoint_on_local_fs,
     drain,
     drain_to_table,
@@ -73,22 +74,28 @@ def _drain_policy(spark, tmp_path) -> tuple[int, dict, dict]:
 
 def test_drain_policy_is_scoped_to_the_drain(spark, tmp_path):
     """Every drain runs one state store per task slot of the session
-    (`defaultParallelism`), not at the session's shuffle width, and a
-    complete-mode drain skips the trailing no-data batch (one data
-    batch, not two, although the watermarked dedup would ask for an
-    eviction batch); the session's own confs are back afterwards."""
+    (`defaultParallelism`), up to MAX_DRAIN_STATE_PARTITIONS, not at the
+    session's shuffle width, and a complete-mode drain skips the
+    trailing no-data batch (one data batch, not two, although the
+    watermarked dedup would ask for an eviction batch); the session's
+    own confs are back afterwards."""
     partitions, before, after = _drain_policy(spark, tmp_path)
-    assert partitions == spark.sparkContext.defaultParallelism
+    slots = spark.sparkContext.defaultParallelism
+    assert partitions == min(slots, MAX_DRAIN_STATE_PARTITIONS)
     assert after == before
 
 
-def test_drain_state_partitions_follow_the_task_slots(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("slots, stores", [(3, 3), (32, MAX_DRAIN_STATE_PARTITIONS)])
+def test_drain_state_partitions_follow_the_task_slots(
+    spark, tmp_path, monkeypatch, slots, stores
+):
     """With the session's slot count reading 3, a drain runs 3 state
-    stores: the count follows the slots, not a constant or the
-    session's shuffle width (5); the session's confs are restored."""
-    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda sc: 3))
+    stores, and with 32 it stops at the cap: the count follows the
+    slots, not a constant or the session's shuffle width (5); the
+    session's confs are restored."""
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda sc: slots))
     partitions, before, after = _drain_policy(spark, tmp_path)
-    assert partitions == 3
+    assert partitions == stores
     assert after == before
 
 

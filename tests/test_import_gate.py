@@ -114,10 +114,9 @@ def test_registered_query_body_imports_resolve():
 #:   * streaming.drain owns each query's checkpoint location and the
 #:     checkpoint manager chosen for it, so no query picks either one
 #:     behind the drain's back;
-#:   * drains size state from the session's task slots
-#:     (defaultParallelism), so no engine code passes a partition count
-#:     of its own, and only the session policy and the drain write the
-#:     shuffle width;
+#:   * streaming.drain sizes each drain's state, so no engine code
+#:     passes a partition count of its own, and only the session policy
+#:     and the drain write the shuffle width;
 #:   * session.configure applies the runtime confs once per session, and
 #:     only the registry's query door calls it;
 #:   * session.scoped_confs is the one conf writer: every override is
