@@ -91,24 +91,46 @@ def _calibration_parallel_sec(n_threads: int = 8) -> float:
     return round(sorted(results)[len(results) // 2], 4)
 
 
+def warm_up(spark, queries: dict, sf_dir: str) -> None:
+    """Run each query once into the `noop` sink at the `sf0.001` sibling
+    of `sf_dir`: generated classes depend on plan shape, not data
+    volume, so this compiles every stage for pennies and the runs at
+    the SF under test measure steady-state execution, not JIT
+    compilation. A failing warm-up query raises rather than silently
+    leaving its JIT cold."""
+    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
+    for q in queries.values():
+        q.fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
+
+
+def time_queries(spark, queries: dict, sf_dir: str, n_runs: int) -> dict[str, list[float]]:
+    """Wall seconds of `n_runs` `noop`-sink runs of each query at
+    `sf_dir`, each run under the Spark job group `<name>#<run>` so an
+    event log can attribute its jobs; the group is cleared afterwards."""
+    sc = spark.sparkContext
+    runs: dict[str, list[float]] = {}
+    try:
+        for name, q in queries.items():
+            runs[name] = []
+            for i in range(n_runs):
+                sc.setJobGroup(f"{name}#{i}", f"{name} run {i}")
+                t0 = time.perf_counter()
+                q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                runs[name].append(time.perf_counter() - t0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return runs
+
+
 def main() -> None:
     from iris_pyspark_spark.sources import ARTIFACT_BUILD_SECONDS
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    registry = load_all()
-    headline = {n: q for n, q in registry.items() if q.headline}
+    headline = {n: q for n, q in sorted(load_all().items()) if q.headline}
 
     spark = get_spark(app_name="iris-pyspark-bench")
-    # Warm codegen/JIT once per headline plan at the smallest SF:
-    # generated classes depend on plan shape, not data volume, so this
-    # compiles every stage for pennies and the sf-under-test runs
-    # measure steady-state execution, not JIT compilation. The warm-up
-    # tables sit beside the ones under test; a failing warm-up query
-    # fails the bench rather than silently leaving its JIT cold.
-    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-    for name, q in sorted(headline.items()):
-        q.fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
+    warm_up(spark, headline, sf_dir)
 
     # Drop warm-up (sf0.001) artifact builds from the build-seconds
     # report: the additive key below should hold only the builds paid at
@@ -129,12 +151,7 @@ def main() -> None:
     calib_parallel = _calibration_parallel_sec()
     timings: dict[str, float] = {}
     medians: dict[str, float] = {}
-    for name, q in sorted(headline.items()):
-        runs: list[float] = []
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
+    for name, runs in time_queries(spark, headline, sf_dir, n_runs).items():
         runs.sort()
         timings[name] = round(runs[0], 4)
         # Median alongside min: a min far below the median marks a query
@@ -194,8 +211,8 @@ def main() -> None:
                 # the serial one, i.e. the host's memory system was
                 # collapsed during this run and the query timings
                 # measured the HOST, not the engine. Readers should
-                # discard collapsed runs and compare against the latest
-                # BENCH_QUIET_*.json reference artifact instead.
+                # discard collapsed runs' timings and compare CPU-s and
+                # byte counts (tools/task_metrics_bench.py) instead.
                 "host_collapsed": bool(
                     calib_parallel > 3.0 * max(calib_before, 1e-9)
                 ),

@@ -157,6 +157,27 @@ def test_engine_seams_go_through_their_primitive():
     assert not hits, "\n".join(hits)
 
 
+def test_one_session_builder():
+    """`session.get_spark` is the one session builder for bench.py, the
+    tools and the engine; a private builder drifts from its confs. The
+    exception is tools/preflight.py, whose vanilla session is the point:
+    it replays the driver, which does not use our factory."""
+    import glob
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    allowed = {"iris_pyspark_spark/session.py", "tools/preflight.py"}
+    paths = [os.path.join(root, "bench.py"), *glob.glob(os.path.join(root, "tools", "*.py"))]
+    paths += glob.glob(os.path.join(root, "iris_pyspark_spark", "**", "*.py"), recursive=True)
+    hits = []
+    for path in paths:
+        rel = os.path.relpath(path, root)
+        if rel in allowed:
+            continue
+        with open(path) as f:
+            hits += [f"{rel}:{n}" for n, line in enumerate(f, 1) if "SparkSession.builder" in line]
+    assert not hits, hits
+
+
 def test_readme_coverage_table_in_sync():
     """The README operator-coverage table must match the registry at
     HEAD: registering a query without re-running

@@ -1,29 +1,23 @@
-"""Contention-robust per-query task metrics (round 12, VERDICT r11 task 1).
+"""Per-query cost rows: wall clock plus Spark's own task metrics.
 
-Wall-clock on this host is noise-bound (three rounds of
-host_collapsed=true; untouched queries swing ±20%). This tool times the
-headline queries the same way bench.py does AND additionally sums
-Spark's own task metrics per query from the event log:
+Wall clock on a contended host is noise-bound; executor CPU time, shuffle
+and input bytes, and task and job counts are not. This tool runs
+bench.py's loop (`warm_up`, then `time_queries`, which puts each run
+under the job group `<name>#<run>`) on a `session.get_spark` session
+with the event log enabled, then reads the log with perfbench's reader
+and reports per query, in perfbench's names and units (seconds, MiB):
 
-  * executorCpuTime — CPU nanoseconds actually spent by task threads.
-    Robust to scheduler delay and fetch wait; under pure memory-bandwidth
-    contention it inflates far less than wall clock, so it is the
-    number to compare across rounds on a noisy host.
-  * executorRunTime — task wall milliseconds (includes fetch wait).
-  * shuffle read/write bytes, input bytes, task count — plan-level
-    work measures that should be bit-stable run to run.
+  * `wall_s`, `cpu_s`, `run_s`, `gc_s`: the minimum over runs;
+  * `tasks`, `jobs`, `shuffle_read_mb`, `shuffle_write_mb`, `input_mb`:
+    the maximum over runs (they repeat run to run; the maximum guards
+    against a run that reused a skipped stage).
 
-Method: one session with the event log enabled; each (query, run) is
-wrapped in its own job group `<name>#<run>`; after the runs the event
-log maps job → job group → stages → task metrics. Reported per query:
-min over runs of each time metric, max over runs of the byte/task
-counts (bytes are identical across runs; max guards against a run that
-reused a skipped stage).
-
-This is a measurement tool only — bench.py remains the driver contract.
+`--plans DIR` also writes each query's `explain("formatted")` plan to
+`DIR/<name>.txt`. bench.py remains the driver contract.
 
 Usage:
-    python tools/task_metrics_bench.py [--runs 4] [--out TASKMETRICS.json] [query ...]
+    SPARK_GRAFT_SF_DIR=path/to/sf0.1 python tools/task_metrics_bench.py \\
+        [--runs 4] [--out TASKMETRICS.json] [--plans DIR] [query ...]
 """
 
 from __future__ import annotations
@@ -34,183 +28,89 @@ import os
 import shutil
 import sys
 import tempfile
-import time
+from collections import defaultdict
+from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import time_queries, warm_up  # noqa: E402
 from iris_pyspark_spark.registry import load_all  # noqa: E402
+from iris_pyspark_spark.session import get_spark  # noqa: E402
+from perfbench.spans import Job, read_event_log  # noqa: E402
+
+_MIN_FIELDS = ("cpu_s", "run_s", "gc_s")
+_MAX_FIELDS = ("tasks", "shuffle_read_mb", "shuffle_write_mb", "input_mb")
 
 
-def _session(event_dir: str):
-    """bench-equivalent session (same master/memory/codecache/runtime
-    confs as session.get_spark) plus the event log."""
-    from pyspark.sql import SparkSession
-
-    from iris_pyspark_spark.session import RUNTIME_CONFS, configure
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = (
-        SparkSession.builder.appName("iris-task-metrics")
-        .master(f"local[{cpus}]")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("IRIS_PYSPARK_DRIVER_MEM", "8g"))
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",
-        )
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", "file://" + event_dir)
-        .config("spark.eventLog.compress", "false")
-    )
-    for k, v in RUNTIME_CONFS.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    configure(spark)
-    return spark
-
-
-def _parse_event_logs(event_dir: str) -> dict[str, dict[str, float]]:
-    """Aggregate task metrics per job group from the Spark event log."""
-    stage_group: dict[int, str] = {}
-    agg: dict[str, dict[str, float]] = {}
-    # Spark 4 writes the v2 rolling layout: a directory per app holding
-    # events_* part files (plus an appstatus marker) — walk everything
-    # and parse any file whose lines are JSON events.
-    paths: list[str] = []
-    for dirpath, _dirnames, filenames in os.walk(event_dir):
-        for fname in filenames:
-            if fname.startswith("appstatus"):
-                continue
-            paths.append(os.path.join(dirpath, fname))
-    for path in sorted(paths):
-        with open(path) as f:
-            for line in f:
-                try:
-                    ev = json.loads(line)
-                except json.JSONDecodeError:
-                    continue
-                kind = ev.get("Event")
-                if kind == "SparkListenerJobStart":
-                    group = (ev.get("Properties") or {}).get("spark.jobGroup.id")
-                    if group:
-                        for sid in ev.get("Stage IDs", []):
-                            stage_group[sid] = group
-                elif kind == "SparkListenerTaskEnd":
-                    group = stage_group.get(ev.get("Stage ID"))
-                    if group is None:
-                        continue
-                    tm = ev.get("Task Metrics") or {}
-                    row = agg.setdefault(
-                        group,
-                        {
-                            "cpu_ns": 0.0,
-                            "run_ms": 0.0,
-                            "shuffle_read_bytes": 0.0,
-                            "shuffle_write_bytes": 0.0,
-                            "input_bytes": 0.0,
-                            "tasks": 0.0,
-                        },
-                    )
-                    row["cpu_ns"] += tm.get("Executor CPU Time", 0)
-                    row["run_ms"] += tm.get("Executor Run Time", 0)
-                    sr = tm.get("Shuffle Read Metrics") or {}
-                    row["shuffle_read_bytes"] += sr.get(
-                        "Remote Bytes Read", 0
-                    ) + sr.get("Local Bytes Read", 0)
-                    sw = tm.get("Shuffle Write Metrics") or {}
-                    row["shuffle_write_bytes"] += sw.get("Shuffle Bytes Written", 0)
-                    im = tm.get("Input Metrics") or {}
-                    row["input_bytes"] += im.get("Bytes Read", 0)
-                    row["tasks"] += 1
-    return agg
+def query_rows(jobs: list[Job], wall: dict[str, list[float]]) -> dict[str, dict[str, float]]:
+    """One row per query of `wall` ({name: [seconds per run]}) from the
+    jobs of its `<name>#<run>` groups; jobs of any other group, or of
+    none, are not counted, and a query none of whose runs ran a job is
+    left out."""
+    by_group: dict[str | None, list[Job]] = defaultdict(list)
+    for job in jobs:
+        by_group[job.group].append(job)
+    rows: dict[str, dict[str, float]] = {}
+    for name, secs in wall.items():
+        runs = [by_group[f"{name}#{i}"] for i in range(len(secs)) if by_group.get(f"{name}#{i}")]
+        if not runs:
+            continue
+        totals = [{f: sum(getattr(j, f) for j in run) for f in _MIN_FIELDS + _MAX_FIELDS} for run in runs]
+        row: dict[str, float] = {"wall_s": round(min(secs), 4)}
+        row.update({f: round(min(t[f] for t in totals), 4) for f in _MIN_FIELDS})
+        row.update({f: round(max(t[f] for t in totals), 3) for f in _MAX_FIELDS})
+        row["jobs"] = max(len(run) for run in runs)
+        rows[name] = row
+    return rows
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="*", help="query names (default: headline set)")
     ap.add_argument("--runs", type=int, default=4)
-    ap.add_argument("--out", default="")
+    ap.add_argument("--out", default="", help="also write the JSON line to this file")
+    ap.add_argument("--plans", default="", help="write each query's formatted plan to DIR/<name>.txt")
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     registry = load_all()
     names = args.queries or sorted(n for n, q in registry.items() if q.headline)
+    queries = {n: registry[n] for n in names}
 
+    # The event-log confs of perfbench's traced runs; spark-submit reads
+    # them when get_spark starts the JVM.
     event_dir = tempfile.mkdtemp(prefix="iris_eventlog_")
-    spark = _session(event_dir)
-    sc = spark.sparkContext
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join([
+        "--conf spark.eventLog.enabled=true",
+        "--conf spark.eventLog.compress=false",
+        "--conf spark.eventLog.rolling.enabled=false",
+        f"--conf spark.eventLog.dir=file://{event_dir}",
+        "pyspark-shell",
+    ])
+    try:
+        spark = get_spark(app_name="iris-task-metrics")
+        cores = spark.sparkContext.defaultParallelism
+        warm_up(spark, queries, sf_dir)
+        wall = time_queries(spark, queries, sf_dir, args.runs)
+        if args.plans:
+            os.makedirs(args.plans, exist_ok=True)
+            for name, q in queries.items():
+                with open(os.path.join(args.plans, f"{name}.txt"), "w") as f, redirect_stdout(f):
+                    q.fn(spark, sf_dir).explain("formatted")
+        spark.stop()  # closes the event log
+        jobs: list[Job] = []
+        for fname in os.listdir(event_dir):
+            with open(os.path.join(event_dir, fname)) as f:
+                jobs += read_event_log(f)
+    finally:
+        shutil.rmtree(event_dir, ignore_errors=True)
 
-    # Warm codegen at the smallest SF (same rationale as bench.py).
-    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-    sc.setJobGroup("warmup", "warmup")
-    for name in names:
-        try:
-            registry[name].fn(spark, warm_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        except Exception as exc:
-            print(f"  warmup failed for {name}: {exc!r}", file=sys.stderr)
-
-    wall: dict[str, list[float]] = {}
-    for name in names:
-        runs: list[float] = []
-        for i in range(args.runs):
-            sc.setJobGroup(f"{name}#{i}", f"{name} run {i}")
-            t0 = time.perf_counter()
-            registry[name].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            runs.append(time.perf_counter() - t0)
-        sc.setJobGroup("idle", "idle")
-        wall[name] = runs
-        print(
-            f"  {name}: wall_min={min(runs):.3f} runs={[round(r, 3) for r in runs]}",
-            file=sys.stderr,
-        )
-
-    spark.stop()  # flush the event log
-    agg = _parse_event_logs(event_dir)
-    shutil.rmtree(event_dir, ignore_errors=True)
-
-    per_query: dict[str, dict[str, float]] = {}
-    for name in names:
-        rows = [agg.get(f"{name}#{i}") for i in range(args.runs)]
-        rows = [r for r in rows if r]
-        if not rows:
-            continue
-        per_query[name] = {
-            "wall_sec_min": round(min(wall[name]), 4),
-            "cpu_sec_min": round(min(r["cpu_ns"] for r in rows) / 1e9, 4),
-            "run_sec_min": round(min(r["run_ms"] for r in rows) / 1e3, 4),
-            "shuffle_read_mb": round(
-                max(r["shuffle_read_bytes"] for r in rows) / 1e6, 3
-            ),
-            "shuffle_write_mb": round(
-                max(r["shuffle_write_bytes"] for r in rows) / 1e6, 3
-            ),
-            "input_mb": round(max(r["input_bytes"] for r in rows) / 1e6, 3),
-            "tasks": int(max(r["tasks"] for r in rows)),
-        }
-
-    from bench import _calibration_parallel_sec, _calibration_sec
-
-    payload = {
-        "metric": "headline_task_metrics",
+    line = json.dumps({
         "sf_dir": sf_dir,
-        "n_runs": args.runs,
-        "cores": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-        "queries": per_query,
-        "total_cpu_sec": round(
-            sum(q["cpu_sec_min"] for q in per_query.values()), 4
-        ),
-        "total_wall_sec": round(
-            sum(q["wall_sec_min"] for q in per_query.values()), 4
-        ),
-        "calibration_sec": _calibration_sec(),
-        "calibration_parallel_sec": _calibration_parallel_sec(),
-    }
-    line = json.dumps(payload)
+        "runs": args.runs,
+        "cores": cores,
+        "queries": query_rows(jobs, wall),
+    })
     print(line)
     if args.out:
         with open(args.out, "w") as f:
