@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, read_parquet
 from ..registry import register
 
 
@@ -342,7 +342,8 @@ def _pair_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(path)
         )
 
-    return spark.read.parquet(
+    return read_parquet(
+        spark,
         materialize(
             sf_dir,
             "coorder_deg",

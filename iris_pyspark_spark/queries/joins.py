@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
-from ..catalog import load_table
+from ..catalog import load_table, read_parquet
 from ..registry import register
 
 
@@ -3185,10 +3185,10 @@ def j_asof_sink_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
         tables=("orders",),
         params="asof-sink-fact-v1",
     )
-    idx_back = spark.read.parquet(idx_path).filter(
+    idx_back = read_parquet(spark, idx_path).filter(
         F.col("pri").isin("1-URGENT", "2-HIGH")
     ).select("pri", "snap_date", "index_bp")
-    fact_back = spark.read.parquet(fact_path)
+    fact_back = read_parquet(spark, fact_path)
     matched = asof_join(
         left=fact_back,
         right=idx_back,

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from ..catalog import parquet_schema
 from ..session import scoped_confs
 from ..sources import materialize
 
@@ -82,9 +83,10 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir, "events_stream_src", stage, tables=("events",), params="stream-src-v1"
     )
     staged = os.path.join(src, "events.parquet")
-    # Probe the batch-read type of ts for this data generation (cheap:
-    # footer read only, no job).
-    probed = spark.read.parquet(staged).schema["ts"].dataType
+    # Probe the batch-read type of ts for this data generation. Inferring
+    # a schema is a one-task job; parquet_schema runs it once per staged
+    # copy, whose stat is stable across calls.
+    probed = parquet_schema(spark, staged)["ts"].dataType
     if isinstance(probed, T.LongType):
         raw = spark.readStream.schema(_events_raw_schema(T.LongType())).parquet(src)
         # TIMESTAMP (ltz), not NTZ: watermarks/event-time require it. The

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 
@@ -116,6 +117,27 @@ def spark():
         except Exception:
             pass  # static conf on an existing session — keep the default
     yield s
+
+
+@pytest.fixture(scope="session")
+def jobs_of(spark):
+    """`jobs_of(thunk)` -> (thunk's result, Spark jobs it launched on
+    this thread). The status tracker is fed by the asynchronous listener
+    bus, so the count waits for the bus to drain."""
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def run(thunk):
+        group = f"jobs_of-{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = thunk()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture(scope="session")
