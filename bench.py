@@ -53,10 +53,12 @@ def _calibration_sec() -> float:
     return round(best, 4)
 
 
-def _calibration_parallel_sec(n_threads: int = 8) -> float:
+def _calibration_parallel_sec() -> float:
     """Parallel MEMORY-STREAMING yardstick: the single-core kernel run
-    on 8 concurrent threads (numpy releases the GIL for large
-    elementwise ops), reported as per-thread median wall. On a quiet
+    on one concurrent thread per CPU this process may use, up to 8
+    (numpy releases the GIL for large elementwise ops), reported as
+    per-thread median wall. More threads than CPUs would time CPU
+    oversubscription, not the memory system. On a quiet
     host this ~equals _calibration_sec (cores are independent); under
     external MEMORY-BANDWIDTH contention it blows up by 10-200x while
     the single-core number barely moves — round 9 observed exactly
@@ -83,6 +85,7 @@ def _calibration_parallel_sec(n_threads: int = 8) -> float:
         with lock:
             results.append(el)
 
+    n_threads = min(8, len(os.sched_getaffinity(0)))
     threads = [threading.Thread(target=work) for _ in range(n_threads)]
     for t in threads:
         t.start()
@@ -198,8 +201,9 @@ def main() -> None:
                 # host contention.
                 "calibration_sec": calib_before,
                 "calibration_sec_after": calib_after,
-                # Parallel memory-streaming yardstick (8 concurrent
-                # copies of the same kernel, per-thread median). Quiet
+                # Parallel memory-streaming yardstick (one concurrent
+                # copy of the same kernel per usable CPU, up to 8;
+                # per-thread median). Quiet
                 # host: ~= calibration_sec. Under external memory-
                 # bandwidth contention it inflates 10-200x while the
                 # serial number barely moves — and the query timings

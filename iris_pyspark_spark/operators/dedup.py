@@ -2,8 +2,8 @@
 SimHash, n-gram Jaccard.
 
 All pure DataFrame compositions — hashing via xxhash64/sha2 built-ins,
-signatures via higher-order functions, candidate generation via
-equi-joins on bucket keys. No Python in the row path, fixed seeds, no
+signatures via min-aggregates over exploded shingles, candidate
+generation via equi-joins on bucket keys. No Python in the row path, fixed seeds, no
 nondeterministic functions → stable output at any parallelism.
 
 Scale design: every near-dup variant reduces the quadratic all-pairs
@@ -67,22 +67,6 @@ def word_shingles(toks: Column, k: int) -> Column:
     )
 
 
-def minhash_signature(shingles: Column, num_hashes: int) -> Column:
-    """num_hashes-wide MinHash signature: sig[i] = min over shingles of
-    xxhash64(shingle, seed=i), as a nested higher-order expression.
-
-    NOTE: Spark evaluates HOF lambdas interpreted (outside whole-stage
-    codegen) — fine for small arrays, ~6 µs/hash at scale. The hot path
-    uses `minhash_signatures` below (explode + codegen min-aggregates),
-    which computes the identical values ~40× faster."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda seed: F.array_min(
-            F.transform(shingles, lambda s: F.xxhash64(s, seed))
-        ),
-    )
-
-
 def shingle_rows(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
     """(id, shingle) rows: k-word shingles built with posexplode + window
     lead()s — whole-stage-codegen throughout (the array-HOF form in
@@ -111,10 +95,10 @@ def minhash_signatures(
 ) -> DataFrame:
     """(id, sig array<long>) MinHash signatures the codegen-friendly way:
     shingle rows (see shingle_rows), num_hashes hash columns inside
-    whole-stage codegen, min-aggregate per document, repack the array.
-    Values are identical to min(xxhash64(shingle, seed=i)) over
-    `minhash_signature`'s array form. The shingle window and this
-    aggregation share the same hash partitioning on id — one shuffle."""
+    whole-stage codegen, min-aggregate per document, repack the array:
+    sig[i] = min over the document's shingles of xxhash64(shingle,
+    seed=i). The shingle window and this aggregation share the same
+    hash partitioning on id — one shuffle."""
     ex = shingle_rows(df, id_col, text_col, shingle_k)
     agg = ex.groupBy(id_col).agg(
         *[

@@ -32,6 +32,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _materialize(df: DataFrame, path: str) -> DataFrame:
+    """Write `df` to parquet at `path` and read it back with `df`'s own
+    schema: the lineage is cut, and the read launches no schema-inference
+    job (each write is a new file version, so a memo of inferred schemas
+    would never hit)."""
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
+
+
 def connected_components(
     edges: DataFrame,
     src: str,
@@ -42,13 +51,11 @@ def connected_components(
     """(vertex, component) for every vertex in `edges`; component = min
     vertex id in the connected component. Isolated vertices don't appear
     in an edge list, so callers union them back if needed."""
-    spark = edges.sparkSession
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     sym = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).dropDuplicates(["src", "dst"])
-    sym.write.mode("overwrite").parquet(f"{scratch_path}/edges")
-    sym = spark.read.parquet(f"{scratch_path}/edges")
+    sym = _materialize(sym, f"{scratch_path}/edges")
 
     labels = (
         sym.select(F.col("src").alias("id"))
@@ -80,8 +87,7 @@ def connected_components(
         )
         # Materialize the round: breaks lineage AND lets the convergence
         # count reuse the same computed result the next join consumes.
-        new_labels.write.mode("overwrite").parquet(f"{scratch_path}/iter{it % 2}")
-        new_labels = spark.read.parquet(f"{scratch_path}/iter{it % 2}")
+        new_labels = _materialize(new_labels, f"{scratch_path}/iter{it % 2}")
         changed = new_labels.filter(F.col("__changed")).count()
         labels = new_labels.drop("__changed")
         if changed == 0:
@@ -124,7 +130,6 @@ def pagerank_integer(
     simply stop forwarding mass, i.e. their contribution is dropped
     rather than redistributed, which keeps the round free of a global
     broadcast and preserves the mass upper-bound invariant."""
-    spark = edges.sparkSession
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).dropDuplicates(
         ["src", "dst"]
     )
@@ -133,26 +138,21 @@ def pagerank_integer(
     # (src, dst, out_deg) saves one join per iteration (6 joins at the
     # default depth) and every round becomes join + combinable SUM.
     out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    e.join(out_deg, "src").write.mode("overwrite").parquet(
-        f"{scratch_path}/pr_edges"
-    )
     # The degree-annotated edge table is read once per round; cache it
     # for the loop (MEMORY_AND_DISK degrades gracefully when the edge
     # table outgrows executor memory at real scale) and release before
     # returning so repeated invocations don't accumulate cached RDDs.
-    e = spark.read.parquet(f"{scratch_path}/pr_edges").persist()
+    e = _materialize(e.join(out_deg, "src"), f"{scratch_path}/pr_edges").persist()
 
     # Vertices are referenced once per round (the teleport-side outer
     # join); materialize the distinct ONCE or every round re-runs a
     # distinct over the full edge table.
-    (
+    vertices = _materialize(
         e.select(F.col("src").alias("id"))
         .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .write.mode("overwrite")
-        .parquet(f"{scratch_path}/pr_vertices")
+        .distinct(),
+        f"{scratch_path}/pr_vertices",
     )
-    vertices = spark.read.parquet(f"{scratch_path}/pr_vertices")
     teleport_micro = (100 - damping_pct) * 10_000  # (1-d) * 1e6
 
     ranks = vertices.withColumn("rank_micro", F.lit(1_000_000).cast("long"))
@@ -175,8 +175,7 @@ def pagerank_integer(
                 + F.expr(f"(coalesce(in_micro, 0L) * {damping_pct}) div 100")
             ).cast("long").alias("rank_micro"),
         )
-        ranks.write.mode("overwrite").parquet(f"{scratch_path}/pr_iter{it % 2}")
-        ranks = spark.read.parquet(f"{scratch_path}/pr_iter{it % 2}")
+        ranks = _materialize(ranks, f"{scratch_path}/pr_iter{it % 2}")
     e.unpersist()
     return ranks
 
@@ -207,13 +206,11 @@ def kcore(
     checked with the per-round count that the materialization already
     paid for.
     """
-    spark = edges.sparkSession
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     sym = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).dropDuplicates(["src", "dst"])
-    sym.write.mode("overwrite").parquet(f"{scratch_path}/kc_edges")
-    cur = spark.read.parquet(f"{scratch_path}/kc_edges")
+    cur = _materialize(sym, f"{scratch_path}/kc_edges")
 
     n_prev = cur.count()
     for it in range(max_iter):
@@ -222,10 +219,7 @@ def kcore(
         pruned = cur.join(keep, "src", "left_semi").join(
             keep.withColumnRenamed("src", "dst"), "dst", "left_semi"
         )
-        pruned.write.mode("overwrite").parquet(
-            f"{scratch_path}/kc_iter{it % 2}"
-        )
-        cur = spark.read.parquet(f"{scratch_path}/kc_iter{it % 2}")
+        cur = _materialize(pruned, f"{scratch_path}/kc_iter{it % 2}")
         n_cur = cur.count()
         if n_cur == n_prev:
             break

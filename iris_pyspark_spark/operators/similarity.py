@@ -1,10 +1,15 @@
 """Vector similarity operators (SURVEY.md §2.10 N3/N4): cosine / dot /
 L2 over `array<float>` embedding columns, plus top-k and IVF pruning.
 
-All arithmetic is double-cast higher-order functions — inside Catalyst
-codegen, no UDF. The fold order is fixed (left fold, 0.0 init), so
-results are bit-deterministic and an oracle can state the identical
-fold (DuckDB list_reduce folds left too; 0.0 + x0 == x0 exactly).
+All Spark arithmetic is unrolled codegen: `dim` double-cast products
+(or squared differences) summed left to right in ONE parsed `F.expr`
+over named columns — compiled into whole-stage codegen, no UDF and no
+array higher-order function (those evaluate interpreted, ~100× slower).
+The sum associates left, so the doubles are bit-deterministic, and the
+DuckDB oracle states the identical sum with its own builders
+(`*_unrolled_sql`, 1-based indexing). The two spellings are kept
+separate on purpose: a shared generator would let one bug pass both
+the engine and its reference.
 
 Scale design:
   * brute-force top-k = broadcast the (small) query set against the
@@ -16,8 +21,6 @@ Scale design:
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -25,60 +28,16 @@ from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Σ aᵢ·bᵢ as a left fold in double precision."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """dot / (norm_a * norm_b) — stated in exactly this operation order
-    everywhere (including oracles)."""
-    return dot(a, b) / (norm(a) * norm(b))
-
-
-def l2_sq(a: Column, b: Column) -> Column:
-    """Squared L2 distance via the same fold discipline."""
-    return F.aggregate(
-        F.zip_with(
-            a, b, lambda x, y: (x.cast("double") - y.cast("double")) * (x.cast("double") - y.cast("double"))
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-#: Names spliceable into an F.expr string — plain (optionally
-#: alias-qualified) identifiers. Each dot-part is BACKTICK-QUOTED at
-#: splice time (see _bq), so a column named `order`, `true`, or
-#: `current_date` parses as the same UnresolvedAttribute F.col would
-#: build instead of colliding with a SQL keyword/literal/function.
-#: Anything else falls back to the Column fold path.
-_SAFE_NAME = re.compile(r"[A-Za-z_][A-Za-z0-9_]*(\.[A-Za-z_][A-Za-z0-9_]*)?")
-
-
 def _bq(name: str) -> str:
     """Backtick-quote each dot-part of a (possibly alias-qualified)
-    identifier for splicing into Spark SQL: `a.emb` -> `` `a`.`emb` ``.
-    Backticked identifiers parse to the identical UnresolvedAttribute,
-    so keyword/boolean/date-literal column names resolve as columns."""
-    return ".".join(f"`{part}`" for part in name.split("."))
+    column name for splicing into Spark SQL: `a.emb` -> `` `a`.`emb` ``.
+    Embedded backticks are doubled, so every name — a keyword (`order`),
+    a literal (`true`), one with a space or a backtick — parses as a
+    column reference, never as SQL."""
+    return ".".join("`" + part.replace("`", "``") + "`" for part in name.split("."))
 
 
-def dot_unrolled_spark_sql(a: str, b: str, dim: int) -> str:
-    """Spark-SQL spelling (0-based `[]` indexing) of the unrolled dot.
-    `x[i]` parses to the same UnresolvedExtractValue as
-    `Column.getItem(i)` and SQL `+` is left-associative, so
-    `F.expr(dot_unrolled_spark_sql(...))` yields the identical
-    expression tree — and bit-identical doubles — as the Column fold.
-    Identifier parts are backtick-quoted (keyword-proof)."""
+def _dot_sql(a: str, b: str, dim: int) -> str:
     a, b = _bq(a), _bq(b)
     return " + ".join(
         f"CAST({a}[{i}] AS DOUBLE) * CAST({b}[{i}] AS DOUBLE)"
@@ -86,83 +45,32 @@ def dot_unrolled_spark_sql(a: str, b: str, dim: int) -> str:
     )
 
 
-def dot_unrolled(a: Column | str, b: Column | str, dim: int) -> Column:
-    """Σ aᵢ·bᵢ unrolled to a flat left-associated sum of `dim` products.
+def dot_unrolled(a: str, b: str, dim: int) -> Column:
+    """Σ aᵢ·bᵢ over the array columns named `a` and `b`, unrolled to a
+    flat left-associated sum of `dim` double products.
 
-    Spark evaluates array higher-order functions interpreted (outside
-    whole-stage codegen) — ~100 ns/element with allocations. A flat
-    expression compiles into the generated Java, ~1 ns/element. The value
-    is bit-identical to `dot`'s left fold: 0.0 + x == x and both
-    associate left-to-right in IEEE double.
-
-    Pass COLUMN-NAME STRINGS when you can: building the 4·dim-node tree
-    Column-by-Column costs ~4·dim Py4J round trips (~1.3 s of pure
-    driver time at dim=64), while the string form is ONE `F.expr` parse
-    (~3 ms) of the same tree. The Column path remains for computed
-    inputs (e.g. a sliced or transformed array)."""
-    if isinstance(a, str) and isinstance(b, str):
-        if _SAFE_NAME.fullmatch(a) and _SAFE_NAME.fullmatch(b):
-            return F.expr(dot_unrolled_spark_sql(a, b, dim))
-        a, b = F.col(a), F.col(b)
-    elif isinstance(a, str) or isinstance(b, str):
-        raise TypeError("dot_unrolled: pass both names as str or both as Column")
-    terms = [
-        a.getItem(i).cast("double") * b.getItem(i).cast("double")
-        for i in range(dim)
-    ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
+    The sum is one `F.expr` parse (~3 ms at dim=64); building the same
+    4·dim-node tree Column by Column costs ~4·dim Py4J round trips
+    (~1.3 s of driver time at dim=64)."""
+    return F.expr(_dot_sql(a, b, dim))
 
 
-def cosine_unrolled(
-    a: Column | str,
-    b: Column | str,
-    dim: int,
-    norm_a: Column | str,
-    norm_b: Column | str,
-) -> Column:
-    """dot/(norm_a*norm_b) with the unrolled dot; norms are precomputed
-    per vector (once per row, not once per pair). Accepts column-name
-    strings like dot_unrolled — pass both vector names as str to get the
-    single-parse F.expr fast path (norm names are cheap either way)."""
-    if isinstance(norm_a, str):
-        norm_a = F.col(norm_a)
-    if isinstance(norm_b, str):
-        norm_b = F.col(norm_b)
-    return dot_unrolled(a, b, dim) / (norm_a * norm_b)
+def cosine_unrolled(a: str, b: str, dim: int, norm_a: str, norm_b: str) -> Column:
+    """dot/(norm_a*norm_b) with the unrolled dot; the norms are columns
+    precomputed per vector (once per row, not once per pair)."""
+    return F.expr(f"({_dot_sql(a, b, dim)}) / ({_bq(norm_a)} * {_bq(norm_b)})")
 
 
-def l2_sq_unrolled_spark_sql(a: str, b: str, dim: int) -> str:
-    """Spark-SQL spelling (0-based) of the unrolled squared-L2 sum —
-    same single-parse rationale (and backtick quoting) as
-    dot_unrolled_spark_sql."""
+def l2_sq_unrolled(a: str, b: str, dim: int) -> Column:
+    """Σ (aᵢ-bᵢ)² unrolled, in one `F.expr` like dot_unrolled."""
     a, b = _bq(a), _bq(b)
-    return " + ".join(
-        f"(CAST({a}[{i}] AS DOUBLE) - CAST({b}[{i}] AS DOUBLE))"
-        f" * (CAST({a}[{i}] AS DOUBLE) - CAST({b}[{i}] AS DOUBLE))"
-        for i in range(dim)
+    return F.expr(
+        " + ".join(
+            f"(CAST({a}[{i}] AS DOUBLE) - CAST({b}[{i}] AS DOUBLE))"
+            f" * (CAST({a}[{i}] AS DOUBLE) - CAST({b}[{i}] AS DOUBLE))"
+            for i in range(dim)
+        )
     )
-
-
-def l2_sq_unrolled(a: Column | str, b: Column | str, dim: int) -> Column:
-    """Σ (aᵢ-bᵢ)² unrolled, same rationale (and same str fast path) as
-    dot_unrolled."""
-    if isinstance(a, str) and isinstance(b, str):
-        if _SAFE_NAME.fullmatch(a) and _SAFE_NAME.fullmatch(b):
-            return F.expr(l2_sq_unrolled_spark_sql(a, b, dim))
-        a, b = F.col(a), F.col(b)
-    elif isinstance(a, str) or isinstance(b, str):
-        raise TypeError("l2_sq_unrolled: pass both names as str or both as Column")
-    terms = []
-    for i in range(dim):
-        d = a.getItem(i).cast("double") - b.getItem(i).cast("double")
-        terms.append(d * d)
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
 
 
 def l2_sq_literal_spark_sql(a: str, point, dim: int) -> str:
@@ -213,37 +121,25 @@ def knn_bruteforce(
     q_vec: str,
     c_vec: str,
     k: int,
-    metric: str = "cosine",
-    dim: int | None = None,
+    dim: int,
     round_sim_digits: int | None = None,
 ) -> DataFrame:
-    """Top-k corpus neighbors per query vector. The query side is
-    broadcast (it is the small side by construction), so the corpus is
-    scanned exactly once, map-side, at any scale; the only shuffle is
-    the per-query top-k window over |Q|·|C| candidate rows.
+    """Exact cosine top-k corpus neighbors per query vector: every
+    (query, corpus) pair with `q_id != c_id`, `sim` = the unrolled dot
+    over the per-row norms, ranked by `sim` descending then `c_id`, and
+    `rnk <= k` kept. Returns the corpus and query columns plus `sim` and
+    `rnk`.
 
-    Pass `dim` (known vector width) to use the unrolled codegen
-    arithmetic with per-row precomputed norms — ~50× less per-pair cost
-    than the fold form. `round_sim_digits` rounds the similarity BEFORE
-    ranking — callers that need cross-engine-identical neighbor order
-    (an oracle comparison, a reproducible labeling job) use it so a
-    libm ulp can never flip two near-equal neighbors."""
-    if dim is not None and metric == "cosine":
-        queries = queries.withColumn(
-            "__qn", F.sqrt(dot_unrolled(q_vec, q_vec, dim))
-        )
-        corpus = corpus.withColumn(
-            "__cn", F.sqrt(dot_unrolled(c_vec, c_vec, dim))
-        )
-        sim = dot_unrolled(q_vec, c_vec, dim) / (
-            F.col("__qn") * F.col("__cn")
-        )
-    elif dim is not None:
-        sim = -l2_sq_unrolled(q_vec, c_vec, dim)
-    elif metric == "cosine":
-        sim = cosine(F.col(q_vec), F.col(c_vec))
-    else:
-        sim = -l2_sq(F.col(q_vec), F.col(c_vec))
+    The query side is broadcast (it is the small side by construction),
+    so the corpus is scanned exactly once, map-side, at any scale; the
+    only shuffle is the per-query top-k window over |Q|·|C| candidate
+    rows. `round_sim_digits` rounds the similarity BEFORE ranking —
+    callers that need cross-engine-identical neighbor order (an oracle
+    comparison, a reproducible labeling job) use it so a libm ulp can
+    never flip two near-equal neighbors."""
+    queries = queries.withColumn("__qn", F.sqrt(dot_unrolled(q_vec, q_vec, dim)))
+    corpus = corpus.withColumn("__cn", F.sqrt(dot_unrolled(c_vec, c_vec, dim)))
+    sim = cosine_unrolled(q_vec, c_vec, dim, "__qn", "__cn")
     if round_sim_digits is not None:
         sim = F.round(sim, round_sim_digits)
     pairs = corpus.crossJoin(broadcast(queries)).filter(F.col(q_id) != F.col(c_id))
@@ -486,19 +382,14 @@ def ivf_assign(
     c_id: str,
     v_vec: str,
     c_vec: str,
-    dim: int | None = None,
+    dim: int,
 ) -> DataFrame:
     """IVF cell assignment: nearest centroid per vector (L2, ties by
     centroid id). Centroids broadcast; one map-side pass over vectors."""
-    d = (
-        l2_sq_unrolled(v_vec, c_vec, dim)
-        if dim is not None
-        else l2_sq(F.col(v_vec), F.col(c_vec))
-    )
     w = Window.partitionBy(v_id).orderBy(F.col("dist_sq").asc(), F.col(c_id).asc())
     return (
         vectors.crossJoin(broadcast(centroids))
-        .withColumn("dist_sq", d)
+        .withColumn("dist_sq", l2_sq_unrolled(v_vec, c_vec, dim))
         .withColumn("__rnk", F.row_number().over(w))
         .filter(F.col("__rnk") == 1)
         .drop("__rnk", c_vec)

@@ -47,10 +47,23 @@ _NORMED = f"""
 """
 
 
-def _normed_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return e.withColumn(
-        "nrm", F.sqrt(dot_unrolled("embedding", "embedding", DIM))
+def _probe_knn(
+    spark: SparkSession, sf_dir: str, probe_mod: int, k: int
+) -> DataFrame:
+    """Exact cosine top-k (knn_bruteforce) over `embeddings` for the
+    probes `vec_id % probe_mod == 0`, as (q_id, q_label, q_emb) ×
+    (vec_id, label, embedding) rows with `sim` and `rnk`: the labelled
+    retrieval the evaluation queries score."""
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
+    probes = e.filter(F.col("vec_id") % probe_mod == 0).select(
+        F.col("vec_id").alias("q_id"),
+        F.col("label").alias("q_label"),
+        F.col("embedding").alias("q_emb"),
+    )
+    return knn_bruteforce(
+        probes, e,
+        q_id="q_id", c_id="vec_id", q_vec="q_emb", c_vec="embedding",
+        k=k, dim=DIM,
     )
 
 
@@ -123,7 +136,7 @@ def n_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = knn_bruteforce(
         queries, corpus,
         q_id="query_id", c_id="neighbor_id", q_vec="q_emb", c_vec="embedding",
-        k=5, metric="cosine", dim=DIM,
+        k=5, dim=DIM,
     )
     return out.select("query_id", "neighbor_id", "sim", F.col("rnk"))
 
@@ -372,7 +385,7 @@ def n_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     topk = knn_bruteforce(
         probes, corpus,
         q_id="query_id", c_id="neighbor_id", q_vec="q_emb", c_vec="embedding",
-        k=5, metric="cosine", dim=DIM, round_sim_digits=9,
+        k=5, dim=DIM, round_sim_digits=9,
     )
     votes = topk.groupBy("query_id", "true_label", "n_label").agg(
         F.count(F.lit(1)).alias("n_votes")
@@ -462,7 +475,7 @@ def n_ivf_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = knn_bruteforce(
         probes, corpus,
         q_id="query_id", c_id="neighbor_id", q_vec="q_emb", c_vec="embedding",
-        k=5, metric="cosine", dim=DIM, round_sim_digits=9,
+        k=5, dim=DIM, round_sim_digits=9,
     ).select("query_id", "neighbor_id")
 
     centroids = e.filter(F.col("vec_id") % 50 == 0).select(
@@ -895,37 +908,20 @@ def n_mrl_prefix_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, absorbs the candidate cut.
     """
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    normed = e.select(
-        "vec_id",
-        "embedding",
-        F.sqrt(
-            dot_unrolled("embedding", "embedding", _MRL_DIM)
-        ).alias("nrm16"),
-        F.sqrt(dot_unrolled("embedding", "embedding", DIM)).alias(
-            "nrm64"
-        ),
+    normed = e.withColumn(
+        "nrm64", F.sqrt(dot_unrolled("embedding", "embedding", DIM))
     )
     probes = normed.filter(F.col("vec_id") % 101 == 0).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("q_emb"),
-        F.col("nrm16").alias("q_nrm16"),
         F.col("nrm64").alias("q_nrm64"),
     )
-    cos16 = cosine_unrolled("q_emb", "embedding", _MRL_DIM, "q_nrm16", "nrm16")
-    coarse = (
-        F.broadcast(probes)
-        .join(normed, F.col("q_id") != F.col("vec_id"))
-        .withColumn("cos16", cos16)
-        .withColumn(
-            "crk",
-            F.row_number().over(
-                Window.partitionBy("q_id").orderBy(
-                    F.col("cos16").desc(), "vec_id"
-                )
-            ),
-        )
-        .filter(F.col("crk") <= _MRL_COARSE_K)
-    )
+    # The coarse stage is exact top-k on the 16-dim prefix.
+    coarse = knn_bruteforce(
+        probes, normed,
+        q_id="q_id", c_id="vec_id", q_vec="q_emb", c_vec="embedding",
+        k=_MRL_COARSE_K, dim=_MRL_DIM,
+    ).withColumnRenamed("sim", "cos16")
     cos64 = cosine_unrolled("q_emb", "embedding", DIM, "q_nrm64", "nrm64")
     refined = coarse.withColumn("cos64", cos64).withColumn(
         "rk",
@@ -1017,42 +1013,16 @@ def n_ndcg_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact integer arithmetic; candidate ranking uses the bit-exact
     unrolled dot products with vec_id tie-breaks.
 
-    Scale: bounded probe broadcast × one corpus scan (the
-    knn_bruteforce shape); scoring windows over ≤5 rows per probe.
+    Scale: bounded probe broadcast × one corpus scan
+    (knn_bruteforce); scoring windows over ≤5 rows per probe.
     """
-    e = load_table(spark, sf_dir, "embeddings")
-    normed = e.select(
-        "vec_id",
-        "label",
-        "embedding",
-        F.sqrt(dot_unrolled("embedding", "embedding", DIM)).alias(
-            "nrm"
-        ),
-    )
-    probes = normed.filter(F.col("vec_id") % 101 == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("label").alias("q_label"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cos = cosine_unrolled("q_emb", "embedding", DIM, "q_nrm", "nrm")
-    ranked = (
-        F.broadcast(probes)
-        .join(normed, F.col("q_id") != F.col("vec_id"))
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("q_id").orderBy(cos.desc(), "vec_id")
-            ),
-        )
-        .filter(F.col("rk") <= 5)
-    )
+    ranked = _probe_knn(spark, sf_dir, 101, k=5)
     w_arr = F.array(*[F.lit(w).cast("long") for w in _NDCG_W])
     ideal_arr = F.array(*[F.lit(v).cast("long") for v in _NDCG_IDEAL])
     top5 = ranked.select(
         "q_id",
         F.when(F.col("label") == F.col("q_label"), 1).otherwise(0).alias("rel"),
-        F.element_at(w_arr, F.col("rk").cast("int")).alias("w_micro"),
+        F.element_at(w_arr, F.col("rnk").cast("int")).alias("w_micro"),
     )
     scored = top5.groupBy("q_id").agg(
         F.sum("rel").cast("long").alias("n_rel"),
@@ -1429,32 +1399,7 @@ def n_uncertainty_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     Margins are exact integer vote counts — no float anywhere past
     the neighbor ranking.
     """
-    e = load_table(spark, sf_dir, "embeddings")
-    normed = e.select(
-        "vec_id",
-        "label",
-        "embedding",
-        F.sqrt(dot_unrolled("embedding", "embedding", DIM)).alias(
-            "nrm"
-        ),
-    )
-    probes = normed.filter(F.col("vec_id") % 61 == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cos = cosine_unrolled("q_emb", "embedding", DIM, "q_nrm", "nrm")
-    neigh = (
-        F.broadcast(probes)
-        .join(normed, F.col("q_id") != F.col("vec_id"))
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("q_id").orderBy(cos.desc(), "vec_id")
-            ),
-        )
-        .filter(F.col("rk") <= 9)
-    )
+    neigh = _probe_knn(spark, sf_dir, 61, k=9)
     votes = neigh.groupBy("q_id", "label").agg(F.count(F.lit(1)).alias("v"))
     vr = votes.withColumn(
         "vrk",
@@ -1653,36 +1598,10 @@ def n_mrr_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: same bounded-probe-broadcast × one-corpus-scan shape as
     n_knn_bruteforce; the per-query reduction keeps only rank-1 and a
     count, so the shuffle after the scan is probes-sized."""
-    e = load_table(spark, sf_dir, "embeddings")
-    normed = e.select(
-        "vec_id",
-        "label",
-        "embedding",
-        F.sqrt(dot_unrolled("embedding", "embedding", DIM)).alias(
-            "nrm"
-        ),
-    )
-    probes = normed.filter(F.col("vec_id") % 101 == 0).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("label").alias("q_label"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cos = cosine_unrolled("q_emb", "embedding", DIM, "q_nrm", "nrm")
-    ranked = (
-        F.broadcast(probes)
-        .join(normed, F.col("q_id") != F.col("vec_id"))
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("q_id").orderBy(cos.desc(), "vec_id")
-            ),
-        )
-        .filter(F.col("rk") <= 10)
-    )
+    ranked = _probe_knn(spark, sf_dir, 101, k=10)
     per_query = ranked.groupBy("q_id").agg(
         F.coalesce(
-            F.min(F.when(F.col("label") == F.col("q_label"), F.col("rk"))),
+            F.min(F.when(F.col("label") == F.col("q_label"), F.col("rnk"))),
             F.lit(0),
         )
         .cast("long")
@@ -2488,7 +2407,6 @@ def n_knn_holdout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         q_vec="q_emb",
         c_vec="embedding",
         k=3,
-        metric="cosine",
         dim=DIM,
     )
     votes = top3.groupBy("query_id", "true_label", "neighbor_label").agg(

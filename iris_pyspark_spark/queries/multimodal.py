@@ -1288,7 +1288,6 @@ def m_asset_embedding_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         q_vec="q_emb",
         c_vec="embedding",
         k=3,
-        metric="cosine",
         dim=64,
     )
     return out.select("query_id", "neighbor_id", "sim", "rnk", "neighbor_kind")
@@ -1564,7 +1563,6 @@ def m_patch_knn_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         q_vec="q_emb",
         c_vec="embedding",
         k=5,
-        metric="cosine",
         dim=64,
     )
     return out.select("query_id", "neighbor_id", "sim", "rnk", "neighbor_cells")

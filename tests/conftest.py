@@ -94,28 +94,19 @@ def spark():
     # scheduling, not data volume: more local threads than 8 just add
     # dispatch overhead for MB-scale partitions. The session runs at the
     # engine's own shuffle width (session.RUNTIME_CONFS), the width every
-    # query sees on a driver session. Shuffle/RDD compression off: tiny
-    # data; none of these knobs exist in the production session factory.
+    # query sees on a driver session, with Spark's default shuffle and
+    # RDD compression (static confs, fixed once the JVM is up).
     cpus = os.environ.get("IRIS_PYSPARK_TEST_CPUS", "8")
     s = get_spark(app_name="iris-pyspark-tests", master=f"local[{cpus}]")
-    for k, v in {
-        "spark.shuffle.compress": "false",
-        "spark.shuffle.spill.compress": "false",
-        "spark.rdd.compress": "false",
-        # Whole-stage codegen OFF for the suite: at sf0.01 Janino
-        # compilation of ~700 generated stages dominates wall-clock
-        # (A/B: 40 scalar queries 20.9s with codegen vs 10.3s without;
-        # even the unrolled 64-dim similarity expressions are faster
-        # interpreted at this data size). Correctness is identical;
-        # the driver's own sweep and the /verify contract drive run
-        # vanilla sessions WITH codegen, so the production path stays
-        # exercised end-to-end each round.
-        "spark.sql.codegen.wholeStage": "false",
-    }.items():
-        try:
-            s.conf.set(k, v)
-        except Exception:
-            pass  # static conf on an existing session — keep the default
+    # Whole-stage codegen OFF for the suite: at sf0.01 Janino
+    # compilation of ~700 generated stages dominates wall-clock
+    # (A/B: 40 scalar queries 20.9s with codegen vs 10.3s without;
+    # even the unrolled 64-dim similarity expressions are faster
+    # interpreted at this data size). Correctness is identical;
+    # the driver's own sweep and the /verify contract drive run
+    # vanilla sessions WITH codegen, so the production path stays
+    # exercised end-to-end each round.
+    s.conf.set("spark.sql.codegen.wholeStage", "false")
     yield s
 
 

@@ -101,10 +101,11 @@ def test_cosine_topk_k_larger_than_corpus(spark):
 
 
 def test_unrolled_fast_path_keyword_column_names(spark):
-    """The F.expr fast path backtick-quotes identifier parts, so columns
-    named like SQL keywords/literals ('order', 'true') — which would
-    otherwise throw ParseException or resolve to a literal — behave
-    exactly like the F.col fold path (ADVICE r07)."""
+    """The unrolled F.expr backtick-quotes identifier parts (doubling
+    embedded backticks), so columns named like SQL keywords/literals
+    ('order', 'true'), or with a space or a backtick in the name — which
+    would otherwise throw ParseException or resolve to a literal —
+    resolve as the named columns (ADVICE r07)."""
     import math
 
     from pyspark.sql import functions as F
@@ -134,6 +135,16 @@ def test_unrolled_fast_path_keyword_column_names(spark):
         .first()["c"]
     )
     assert abs(got - 11.0 / (math.sqrt(5.0) * math.sqrt(25.0))) < 1e-15
+    odd = df.toDF("my emb", "a`b")
+    assert odd.select(dot_unrolled("my emb", "a`b", 2).alias("d")).first()["d"] == 11.0
+    assert odd.select(l2_sq_unrolled("a`b", "my emb", 2).alias("d")).first()["d"] == 8.0
+    got = (
+        odd.withColumn("n 1", F.sqrt(dot_unrolled("my emb", "my emb", 2)))
+        .withColumn("n`2", F.sqrt(dot_unrolled("a`b", "a`b", 2)))
+        .select(cosine_unrolled("my emb", "a`b", 2, "n 1", "n`2").alias("c"))
+        .first()["c"]
+    )
+    assert abs(got - 11.0 / (math.sqrt(5.0) * math.sqrt(25.0))) < 1e-15
 
 
 def test_l2_literal_sql_bit_identical_to_lit_fold(spark):
@@ -146,10 +157,7 @@ def test_l2_literal_sql_bit_identical_to_lit_fold(spark):
 
     from pyspark.sql import functions as F
 
-    from iris_pyspark_spark.operators.similarity import (
-        l2_sq_literal_spark_sql,
-        l2_sq_unrolled,
-    )
+    from iris_pyspark_spark.operators.similarity import l2_sq_literal_spark_sql
 
     point = [0.1, -0.30000000000000004, 5e-324, -0.0]
     df = spark.createDataFrame(
@@ -158,11 +166,13 @@ def test_l2_literal_sql_bit_identical_to_lit_fold(spark):
     fast = df.select(
         F.expr(l2_sq_literal_spark_sql("order", point, 4)).alias("d")
     ).first()["d"]
-    fold = df.select(
-        l2_sq_unrolled(
-            F.col("order"), F.array(*[F.lit(float(x)) for x in point]), 4
-        ).alias("d")
-    ).first()["d"]
+    # The reference: the same left-associated sum built Column by
+    # Column against F.lit literals.
+    fold = None
+    for i, x in enumerate(point):
+        d = F.col("order").getItem(i).cast("double") - F.lit(float(x))
+        fold = d * d if fold is None else fold + d * d
+    fold = df.select(fold.alias("d")).first()["d"]
     assert struct.pack(">d", fast) == struct.pack(">d", fold)
 
 
