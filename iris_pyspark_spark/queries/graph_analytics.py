@@ -181,11 +181,7 @@ def _triangle_artifacts(spark: SparkSession, sf_dir: str):
     inputs = {"tables": ("lineitem",), "params": "tri_orient_v3"}
     ek_path = materialize(sf_dir, "triangle_ek", build_ek, **inputs)
     adj_path = materialize(sf_dir, "triangle_adj", build_adj, **inputs)
-    return (
-        spark.read.parquet(ek_path),
-        deg,
-        spark.read.parquet(adj_path),
-    )
+    return read_parquet(spark, ek_path), deg, read_parquet(spark, adj_path)
 
 
 @register("g_triangle_count", oracle=_TRIANGLE_ORACLE, tags=("J10", "J1", "A2"), headline=True)
@@ -308,14 +304,15 @@ def _coorder_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             path
         )
 
-    return spark.read.parquet(
+    return read_parquet(
+        spark,
         materialize(
             sf_dir,
             "coorder_pairs",
             build,
             tables=("lineitem",),
             params="coorder_pairs_v2",
-        )
+        ),
     )
 
 

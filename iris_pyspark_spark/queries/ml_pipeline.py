@@ -237,6 +237,7 @@ def ml_linreg_normal_eq_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     MLlib side is WeightedLeastSquares' single treeAggregate pass over
     the same rows (normal solver — no iterations); both are linear
     scans at any SF."""
+    from pyspark.ml.feature import VectorAssembler
     from pyspark.ml.regression import LinearRegression
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -245,9 +246,10 @@ def ml_linreg_normal_eq_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("l_quantity")).cast("double").alias("x1"),
         F.round(F.col("l_discount") * 100).cast("double").alias("x2"),
     )
-    train = obs.select(
-        array_to_vector(F.array("x1", "x2")).alias("features"),
-        F.col("y").alias("label"),
+    # VectorAssembler records the vector's size in the column's ML
+    # metadata; without it `fit` runs a `head()` job to count features.
+    train = VectorAssembler(inputCols=["x1", "x2"], outputCol="features").transform(
+        obs.withColumnRenamed("y", "label")
     )
     model = LinearRegression(
         solver="normal", regParam=0.0, elasticNetParam=0.0

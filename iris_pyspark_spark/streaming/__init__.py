@@ -31,6 +31,8 @@ import os
 import shutil
 from urllib.parse import urlparse
 
+from py4j.java_gateway import JavaObject
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -105,7 +107,10 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: The most state stores a drain gives each stateful operator. A drain
 #: is bounded, so its state is the size of its final answer, and every
 #: store is one task per micro-batch that loads and commits state: past
-#: a few stores, more of them only add that fixed cost.
+#: a few stores, more of them only add that fixed cost. A temporary
+#: drain over files runs one store per advisory partition of its input
+#: (`drain`), so the cap binds from 8 x 64 MiB = 512 MiB of input at
+#: Spark's default advisory size.
 #: `st_pipeline_ingest` at sf0.1 on `local[32]` (4-CPU host; medians of
 #: 6-8 runs in two interleaved probes) ran 1.54 s with 4 stores,
 #: 1.63 and 1.81 s with 8, 2.08 s with 16 and 3.50 s with 32.
@@ -126,19 +131,63 @@ FS_CHECKPOINT_MANAGER = (
 )
 
 
-def checkpoint_on_local_fs(spark: SparkSession, checkpoint: str | None) -> bool:
+def checkpoint_on_local_fs(hadoop_conf: JavaObject, checkpoint: str | None) -> bool:
     """Whether a drain's checkpoint resolves to a `file:` URI. The
     scheme is the location's own; a scheme-less path, or `None` (Spark's
     temporary checkpoint, a scheme-less local path), resolves against
-    the session's `fs.defaultFS`, as Spark qualifies it."""
+    `fs.defaultFS` in `hadoop_conf`, the session's Hadoop conf
+    (`sessionState().newHadoopConf()`, which Spark resolves the path
+    with)."""
     scheme = urlparse(checkpoint or "").scheme
     if not scheme:
-        # newHadoopConf is the Hadoop conf Spark resolves the path with.
-        default_fs = spark._jsparkSession.sessionState().newHadoopConf().get(
-            "fs.defaultFS", "file:///"
-        )
-        scheme = urlparse(default_fs).scheme
+        scheme = urlparse(hadoop_conf.get("fs.defaultFS", "file:///")).scheme
     return scheme.lower() == "file"
+
+
+def _streamed_file_bytes(df: DataFrame, hadoop_conf: JavaObject) -> int | None:
+    """The bytes under the paths of `df`'s streaming sources, or `None`
+    unless every one is a file source whose path can be listed. Batch
+    leaves (the static side of a stream-static join) do not count."""
+    jvm = df.sparkSession._jvm
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    total = 0
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if not leaf.isStreaming():
+            continue
+        if leaf.nodeName() != "StreamingRelation":  # DSv2, rate, Python sources
+            return None
+        path = leaf.dataSource().options().get("path")
+        if path.isEmpty():
+            return None
+        jpath = jvm.org.apache.hadoop.fs.Path(path.get())
+        try:
+            fs = jpath.getFileSystem(hadoop_conf)
+            total += fs.getContentSummary(jpath).getLength()
+        except Py4JJavaError:  # missing, a glob, or unreadable
+            return None
+    return total
+
+
+def _state_partitions(
+    df: DataFrame, hadoop_conf: JavaObject, checkpoint: str | None
+) -> int:
+    """The state-store count `drain` gives `df`'s stateful operators:
+    one per advisory partition of a temporary drain's file input, from
+    1 up to the session's task slots and MAX_DRAIN_STATE_PARTITIONS;
+    the slots and the cap for any other drain."""
+    spark = df.sparkSession
+    slots = min(spark.sparkContext.defaultParallelism, MAX_DRAIN_STATE_PARTITIONS)
+    if checkpoint is not None:
+        return slots
+    size = _streamed_file_bytes(df, hadoop_conf)
+    if size is None:
+        return slots
+    sql_conf = spark._jvm.org.apache.spark.sql.internal.SQLConf
+    advisory = spark._jsparkSession.sessionState().conf().getConf(
+        sql_conf.ADVISORY_PARTITION_SIZE_IN_BYTES()
+    )
+    return max(1, min(-(-size // advisory), slots))
 
 
 def drain(
@@ -157,15 +206,24 @@ def drain(
     For this drain only, up to four confs are overridden and then
     restored:
 
-    * `spark.sql.shuffle.partitions` = the session's task slots
-      (`SparkContext.defaultParallelism`: N on `local[N]`, the total
-      executor cores on a cluster, or `spark.default.parallelism` when
-      set), at most MAX_DRAIN_STATE_PARTITIONS. The streaming path gets
-      no AQE coalescing, so this is the state-store count of every
-      stateful operator. Up to the cap, one store per slot runs each
-      stateful stage of each micro-batch as one wave. The count only
-      spreads keys over stores, so it cannot change a drained answer.
-      A persistent checkpoint keeps the count its first run recorded.
+    * `spark.sql.shuffle.partitions`, the state-store count of every
+      stateful operator (the streaming path gets no AQE coalescing):
+      - with a temporary checkpoint over file sources only, one store
+        per `spark.sql.adaptive.advisoryPartitionSizeInBytes` of the
+        files under the sources' paths, the size AQE coalesces a batch
+        shuffle to, clamped to 1 and to the slot count below. A
+        temporary checkpoint lives for this drain only, so its whole
+        input is known at start; a small drain runs one store, one
+        task per stateful stage instead of one per slot;
+      - otherwise (any other source, a path that cannot be listed, or
+        a persistent `checkpoint`, whose count is fixed for its life
+        while later runs may drain far more) the session's task slots
+        (`SparkContext.defaultParallelism`: N on `local[N]`, the total
+        executor cores on a cluster, or `spark.default.parallelism`
+        when set), at most MAX_DRAIN_STATE_PARTITIONS, so each
+        stateful stage runs one wave.
+      The count only spreads keys over stores, so it cannot change a
+      drained answer.
     * `spark.sql.streaming.checkpointLocation` is unset. Under a
       session checkpoint root, Spark keeps a named query's checkpoint
       at `<root>/<queryName>` for good, and a later process reusing the
@@ -194,13 +252,13 @@ def drain(
       (dedup, inner stream-stream join) may skip it too; a query whose
       final rows come from watermark expiry must not."""
     spark = writer._spark  # DataStreamWriter has no public session accessor
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    partitions = _state_partitions(writer._df, hadoop_conf, checkpoint)
     overrides: dict[str, str | None] = {
-        "spark.sql.shuffle.partitions": str(
-            min(spark.sparkContext.defaultParallelism, MAX_DRAIN_STATE_PARTITIONS)
-        ),
+        "spark.sql.shuffle.partitions": str(partitions),
         "spark.sql.streaming.checkpointLocation": None,
     }
-    if checkpoint_on_local_fs(spark, checkpoint):
+    if checkpoint_on_local_fs(hadoop_conf, checkpoint):
         overrides["spark.sql.streaming.checkpointFileManagerClass"] = (
             FS_CHECKPOINT_MANAGER
         )

@@ -4,6 +4,8 @@ session setting of the inference confs, and reads with that schema."""
 
 from __future__ import annotations
 
+import os
+
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -11,6 +13,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import types as T
 
 from iris_pyspark_spark.catalog import load_table, read_parquet
+from iris_pyspark_spark.registry import load_all
 from iris_pyspark_spark.session import scoped_confs
 
 
@@ -19,6 +22,17 @@ def test_second_load_launches_no_job(spark, sf_dir, jobs_of):
     df, jobs = jobs_of(lambda: load_table(spark, sf_dir, "orders"))
     assert jobs == 0
     assert df.schema == spark.read.parquet(f"{sf_dir}/orders.parquet").schema
+
+
+def test_warm_triangle_count_build_launches_no_job(spark, sf_dir, jobs_of):
+    """`g_triangle_count` reads its three scratch artifacts (oriented
+    edges, degrees, adjacency lists) with known schemas: once they
+    exist, building the query launches no job."""
+    small = os.path.join(os.path.dirname(sf_dir), "sf0.001")
+    fn = load_all()["g_triangle_count"].fn
+    fn(spark, small)
+    _, jobs = jobs_of(lambda: fn(spark, small))
+    assert jobs == 0
 
 
 def test_rewritten_file_is_inferred_again(spark, tmp_path):

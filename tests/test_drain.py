@@ -22,6 +22,8 @@ from iris_pyspark_spark.streaming import (
     drain_to_table,
 )
 
+ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
 CHECKPOINT_ROOT = "spark.sql.streaming.checkpointLocation"
 CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
 FILE_CONTEXT_MANAGER = (
@@ -30,26 +32,33 @@ FILE_CONTEXT_MANAGER = (
 )
 
 
-def _stream(spark, tmp_path):
-    """A one-file, 100-row parquet source: `k` = id % 3 (34/33/33 rows)."""
+def _stream(spark, tmp_path, glob: str = ""):
+    """A one-file, 100-row parquet source: `k` = id % 3 (34/33/33 rows),
+    read from its directory, or through `glob` under it."""
     src = str(tmp_path / "src")
     spark.range(100).coalesce(1).withColumn("k", F.col("id") % 3).write.parquet(src)
-    return spark.readStream.schema("id long, k long").parquet(src)
+    return spark.readStream.schema("id long, k long").parquet(src + glob)
+
+
+def _source_bytes(tmp_path) -> int:
+    """The bytes Hadoop's local filesystem lists under `_stream`'s
+    source: every file but the hidden `.crc` checksum sidecars."""
+    files = (f for f in (tmp_path / "src").rglob("*") if f.is_file())
+    return sum(f.stat().st_size for f in files if not f.name.endswith(".crc"))
 
 
 def _temp_views(spark) -> int:
     return sum(t.isTemporary for t in spark.catalog.listTables())
 
 
-def _drain_policy(spark, tmp_path) -> tuple[int, dict, dict]:
-    """Drain a watermarked dedup + count in complete mode under a
-    session shuffle width of 5: the state partitions of its one batch,
-    and the session's confs before and after the drain."""
-    stream = _stream(spark, tmp_path).withColumn(
-        "ts", F.timestamp_seconds(F.col("id"))
-    )
+def _drain_policy(spark, stream, checkpoint=None) -> tuple[int, dict, dict]:
+    """Drain a watermarked dedup + count of `_stream`'s `stream` in
+    complete mode under a session shuffle width of 5: the state
+    partitions of its one batch, and the session's confs before and
+    after the drain."""
+    stream = stream.withColumn("ts", F.timestamp_seconds(F.col("id")))
     keys = (
-        "spark.sql.shuffle.partitions",
+        SHUFFLE_PARTITIONS,
         "spark.sql.streaming.noDataMicroBatches.enabled",
     )
     saved = spark.conf.get(keys[0])
@@ -62,7 +71,7 @@ def _drain_policy(spark, tmp_path) -> tuple[int, dict, dict]:
             .groupBy("k")
             .count()
         )
-        q = drain(agg.writeStream.format("noop"), "complete")
+        q = drain(agg.writeStream.format("noop"), "complete", checkpoint=checkpoint)
         after = {k: spark.conf.get(k) for k in keys}
     finally:
         spark.conf.set(keys[0], saved)
@@ -72,31 +81,67 @@ def _drain_policy(spark, tmp_path) -> tuple[int, dict, dict]:
     return progress[0]["stateOperators"][0]["numShufflePartitions"], before, after
 
 
+def _slots(monkeypatch, slots: int) -> None:
+    """Make every SparkContext report `slots` task slots."""
+    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda sc: slots))
+
+
 def test_drain_policy_is_scoped_to_the_drain(spark, tmp_path):
-    """Every drain runs one state store per task slot of the session
-    (`defaultParallelism`), up to MAX_DRAIN_STATE_PARTITIONS, not at the
-    session's shuffle width, and a complete-mode drain skips the
-    trailing no-data batch (one data batch, not two, although the
-    watermarked dedup would ask for an eviction batch); the session's
-    own confs are back afterwards."""
-    partitions, before, after = _drain_policy(spark, tmp_path)
-    slots = spark.sparkContext.defaultParallelism
-    assert partitions == min(slots, MAX_DRAIN_STATE_PARTITIONS)
+    """A drain over a small file source runs one state store, not one
+    per task slot or the session's shuffle width, and a complete-mode
+    drain skips the trailing no-data batch (one data batch, not two,
+    although the watermarked dedup would ask for an eviction batch);
+    the session's own confs are back afterwards."""
+    partitions, before, after = _drain_policy(spark, _stream(spark, tmp_path))
+    assert partitions == 1
     assert after == before
 
 
-@pytest.mark.parametrize("slots, stores", [(3, 3), (32, MAX_DRAIN_STATE_PARTITIONS)])
+@pytest.mark.parametrize(
+    "slots, pieces, stores",
+    [
+        pytest.param(3, 20, 3, id="3-3"),
+        pytest.param(32, 20, MAX_DRAIN_STATE_PARTITIONS, id="32-8"),
+        pytest.param(32, 5, 5, id="32-5"),
+    ],
+)
 def test_drain_state_partitions_follow_the_task_slots(
-    spark, tmp_path, monkeypatch, slots, stores
+    spark, tmp_path, monkeypatch, slots, pieces, stores
 ):
-    """With the session's slot count reading 3, a drain runs 3 state
-    stores, and with 32 it stops at the cap: the count follows the
-    slots, not a constant or the session's shuffle width (5); the
-    session's confs are restored."""
-    monkeypatch.setattr(SparkContext, "defaultParallelism", property(lambda sc: slots))
-    partitions, before, after = _drain_policy(spark, tmp_path)
+    """With the advisory partition size lowered so the source's bytes
+    make `pieces` advisory partitions, a drain runs one store per piece,
+    up to the slots (3) and to the cap (with 32 slots): not the
+    session's shuffle width (5). The advisory size and the session's
+    confs are back afterwards."""
+    _slots(monkeypatch, slots)
+    stream = _stream(spark, tmp_path)
+    size = _source_bytes(tmp_path)
+    advisory = -(-size // pieces)
+    assert -(-size // advisory) == pieces
+    prior = spark.conf.get(ADVISORY)
+    with scoped_confs(spark, {ADVISORY: str(advisory)}):
+        partitions, before, after = _drain_policy(spark, stream)
     assert partitions == stores
     assert after == before
+    assert spark.conf.get(ADVISORY) == prior
+
+
+def test_unsized_drains_keep_the_slot_rule(spark, tmp_path, monkeypatch):
+    """A drain whose input is not known at start runs one store per
+    slot (3 here), up to the cap, as before: a persistent checkpoint
+    (its count is fixed for the checkpoint's life), a file source read
+    through a glob (which cannot be listed as one path) and a `rate`
+    source (not a file source)."""
+    _slots(monkeypatch, 3)
+    stream = _stream(spark, tmp_path / "a")
+    persistent, before, after = _drain_policy(spark, stream, str(tmp_path / "ckpt"))
+    assert (persistent, after) == (3, before)
+    globbed = _stream(spark, tmp_path / "b", glob="/*.parquet")
+    partitions, before, after = _drain_policy(spark, globbed)
+    assert (partitions, after) == (3, before)
+    rate = spark.readStream.format("rate").load().groupBy().count()
+    overrides = _drain_overrides(monkeypatch, rate.writeStream.format("noop"))
+    assert overrides[SHUFFLE_PARTITIONS] == "3"
 
 
 def test_scoped_confs_restore_or_unset(spark):
@@ -243,9 +288,10 @@ def test_scheme_less_checkpoints_follow_the_default_filesystem(spark):
     Spark's manager; a `file:` URI still gets the FileSystem one."""
     s = spark.newSession()
     s.conf.set("fs.defaultFS", "hdfs://nn:8020")
-    assert not checkpoint_on_local_fs(s, "/tmp/ckpt")
-    assert not checkpoint_on_local_fs(s, None)
-    assert checkpoint_on_local_fs(s, "file:///tmp/ckpt")
+    hadoop_conf = s._jsparkSession.sessionState().newHadoopConf()
+    assert not checkpoint_on_local_fs(hadoop_conf, "/tmp/ckpt")
+    assert not checkpoint_on_local_fs(hadoop_conf, None)
+    assert checkpoint_on_local_fs(hadoop_conf, "file:///tmp/ckpt")
 
 
 def test_local_drains_run_the_filesystem_checkpoint_manager(spark, tmp_path):

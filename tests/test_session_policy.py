@@ -39,7 +39,7 @@ def _classes_compiled(spark) -> int:
 #: nonzero: a CSV round-trip (write, header read, CSV schema inference)
 #: and an MLlib `LinearRegression.fit`. Reading an input table or a
 #: scratch artifact launches none (catalog.read_parquet).
-WARM_BUILD_JOBS = {"s_csv_scan_roundtrip": 3, "ml_linreg_normal_eq_check": 3}
+WARM_BUILD_JOBS = {"s_csv_scan_roundtrip": 3, "ml_linreg_normal_eq_check": 2}
 
 
 @pytest.fixture(scope="module")
